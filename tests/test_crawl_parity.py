@@ -180,6 +180,49 @@ def test_resume_equivalence(spark, tmp_path):
     assert resumed_order == fetch_order(straight.ledger_df())
 
 
+def _in_memory_relations(spark, df) -> list[int]:
+    """Identity hashes of the cache entries the frame's optimized plan
+    reads (one per InMemoryRelation leaf)."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    ident = spark._jvm.java.lang.System.identityHashCode
+    return [
+        ident(leaf.cacheBuilder())
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.getClass().getSimpleName() == "InMemoryRelation"
+    ]
+
+
+def test_rounds_cut_at_barriers_and_release_them(spark, tmp_path):
+    """The frames run_round returns read no cached frame but the four
+    fixture tables (the round is cut at local checkpoints, not a cache
+    spine), and each committed round frees its checkpoints: the context's
+    persistent RDDs do not grow from one round to the next."""
+    cfg = CrawlConfig(**{**CFG.__dict__, "rounds": 3, "validate_pixels": False})
+    eng = CrawlEngine(spark, cfg, str(tmp_path / "ck"))
+    fixtures = {
+        i for df in (eng.links, eng.pages, eng.robots, eng.outlinks)
+        for i in _in_memory_relations(spark, df)
+    }
+    assert len(fixtures) == 4
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    sizes, cached = [], []
+    run_round = eng.run_round
+
+    def checked_round(frontier):
+        sizes.append(persistent().size())
+        ledger, next_frontier = run_round(frontier)
+        for df in (ledger, next_frontier):
+            cached.extend(i for i in _in_memory_relations(spark, df) if i not in fixtures)
+        return ledger, next_frontier
+
+    eng.run_round = checked_round
+    eng.run()
+    sizes.append(persistent().size())
+    assert cached == []
+    # from round 1 on: round 0 starts before some fixture tables are built
+    assert all(b <= a for a, b in zip(sizes[1:], sizes[2:])), sizes
+
+
 def test_cuckoo_filter_crawl_identical(spark, tmp_path):
     """A crawl with the cuckoo URL-seen pre-filter produces a
     bit-identical ledger and seen set to the bloom crawl — the filter is

@@ -45,14 +45,24 @@ def test_invariant_under_partitioning(spark):
     assert seqs[0] == seqs[1]
 
 
-def test_no_single_partition_exchange(spark):
+def test_no_single_partition_exchange(spark, monkeypatch):
+    """The sequence is computed inside the operator's own local checkpoint
+    (the returned frame plans as a scan of it), so check the plan that
+    checkpoint materializes: range-partitioned, never one reducer."""
     df = _frame(spark)
-    caches: list = []
-    out = with_global_sequence(df, [F.desc("priority"), F.asc("url_hash")], caches=caches)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange SinglePartition" not in plan, plan
-    for c in caches:
-        c.unpersist()
+    materialized = []
+    checkpoint = type(df).localCheckpoint
+
+    def recording_checkpoint(self, *args, **kwargs):
+        materialized.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "localCheckpoint", recording_checkpoint)
+    with_global_sequence(df, [F.desc("priority"), F.asc("url_hash")])
+    assert materialized
+    for plan in materialized:
+        assert "Exchange SinglePartition" not in plan, plan
+        assert "rangepartitioning" in plan, plan
 
 
 def test_empty_frame(spark):

@@ -14,11 +14,11 @@ partition. The equivalent distributed plan:
 
 The per-partition counts are collected to the driver — ONE ROW PER
 PARTITION, bounded by cluster size, never by data (same bounded-metadata
-job ``RDD.zipWithIndex`` runs). The tagged frame is persisted and
-materialized by that count job on purpose: RangePartitioner samples its
-bounds with a seed derived from the RDD instance, so two independent
-re-executions of the same unmaterialized plan may pick different bounds;
-every consumer must read the one materialized layout.
+job ``RDD.zipWithIndex`` runs). The tagged frame is local-checkpointed
+before that count on purpose: RangePartitioner samples its bounds with a
+seed derived from the RDD instance, so two independent re-executions of
+the same unmaterialized plan may pick different bounds; every consumer
+must read the one materialized layout.
 
 The result is bit-identical to the global ``row_number`` when the order keys
 are unique (the crawl ledger's (priority, url_hash) is: url_hash is unique
@@ -28,7 +28,6 @@ within a round). Reference analog: the sequential fetch loop's enumerate
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -38,14 +37,13 @@ def with_global_sequence(
     order_cols: list[Column],
     out_col: str = "fetch_seq",
     num_partitions: int | None = None,
-    caches: list[DataFrame] | None = None,
 ) -> DataFrame:
     """1-based global sequence in ``order_cols`` order, no single reducer.
 
     ``order_cols`` must be sort expressions (``F.desc(...)`` / ``F.asc(...)``
     / plain columns) forming a UNIQUE total order. The intermediate frame is
-    persisted (MEMORY_AND_DISK); pass ``caches`` to receive it for
-    unpersisting once the result is materialized.
+    a local checkpoint whose blocks outlive the result's plan; the caller
+    frees them (``CrawlEngine.run`` does at each round commit).
     """
     spark = df.sparkSession
     n = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -53,11 +51,8 @@ def with_global_sequence(
     tagged = rp.withColumn("__pid", F.spark_partition_id()).withColumn(
         "__local_rn",
         F.row_number().over(Window.partitionBy("__pid").orderBy(*order_cols)),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    if caches is not None:
-        caches.append(tagged)
-    # bounded driver hop: <= n rows (partition counts), and it eagerly
-    # materializes `tagged` so the join below reads the same layout
+    ).localCheckpoint()
+    # bounded driver hop: <= n rows (partition counts)
     counts = sorted(
         (r["__pid"], r["__cnt"])
         for r in tagged.groupBy("__pid").agg(F.count("*").alias("__cnt")).collect()

@@ -106,7 +106,6 @@ def admit_per_domain(
     robots: DataFrame,
     base_budget: int = DEFAULT_HOST_BUDGET,
     salt_buckets: int = 64,
-    caches: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Split the frontier into (admitted, deferred) for this round.
 
@@ -156,15 +155,6 @@ def admit_per_domain(
     f = f.withColumn("__salt", salt(11, salt_buckets, "url_hash"))
     w1 = Window.partitionBy("domain", "__salt").orderBy(*order)
     f = f.withColumn("__lrank", F.row_number().over(w1))
-    if caches is not None:
-        # admitted and deferred are consumed by DIFFERENT downstream
-        # actions (fetch chain vs next-frontier write); without a cache the
-        # second consumer re-executes the full-frontier phase-1 window.
-        # Cache the post-phase-1 frame — both outputs are filters (plus the
-        # bounded phase-2 window) over it. Caller unpersists after its
-        # round materializes (same contract as with_global_sequence).
-        f = f.cache()
-        caches.append(f)
     survivors = f.filter(F.col("__lrank") <= F.lit(base_budget))
     losers = f.filter(F.col("__lrank") > F.lit(base_budget))
     # phase 2: global per-domain rank over the bounded survivor set

@@ -38,8 +38,7 @@ _FIXTURES_DIR = os.path.join(_REPO_ROOT, "tests", "fixtures")
 # aggregation). A registered query fn returns a LAZY DataFrame, so the
 # builder cannot unpersist before the caller's action runs; callers that
 # invoke queries repeatedly in one session (bench.py's cold/warm/tenx legs)
-# call release_persisted() after each consuming action — same contract as
-# admit_per_domain's ``caches`` parameter.
+# call release_persisted() after each consuming action.
 _PERSISTED: list[DataFrame] = []
 
 

@@ -74,15 +74,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # Bound plan EXPLAIN strings (debug-only artifacts): AQE rebuilds
-        # the plan string on every stage update, and nested cached plans
-        # (InMemoryRelation prints its full child tree, recursively) make
-        # that string grow combinatorially — measured a 1 GiB-heap OOM
-        # inside StringConcat on the crawl's cache spine, and real driver
-        # CPU per AQE update. 256 KiB is ~3x the largest real explain in
-        # plans/r06; semantics are untouched (truncation only affects the
-        # rendered string).
-        .config("spark.sql.maxPlanStringLength", str(256 * 1024))
     )
     # Shuffle/spill on tmpfs: the sandbox has ONE disk shared by 32 cores,
     # so disk-bound shuffle writes serialize at high parallelism (a real

@@ -143,7 +143,6 @@ class CrawlEngine:
         # lrl-crawler.py:280-291, generalized per-domain instead of
         # whole-crawl). Rows of blocked domains stay queued, never admitted.
         self.blocked_domains: set[str] = set()
-        self._pending_caches: list[DataFrame] = []
 
     def _label(self, phase: str) -> None:
         """Job label for the UI/REST (guide: label your jobs); phase
@@ -191,9 +190,8 @@ class CrawlEngine:
                 for uid in fx.search_result_ids(c.seed, qid, page, c.n_urls):
                     rows.append((uid, 0, 0.0))
         disc = self.spark.createDataFrame(rows, DISCOVERY_SCHEMA)
-        resolved = self._resolve_discoveries(disc).cache()
-        self._pending_caches.append(resolved)  # unpersisted after round 0
-        fresh = self.seen.filter_unseen(resolved)
+        # barrier, taken before seen.add changes the set (see run_round)
+        fresh = self.seen.filter_unseen(self._resolve_discoveries(disc)).localCheckpoint()
         self._seen_total += self.seen.add(fresh.select("url_hash"), assume_new=True)
         return fresh
 
@@ -229,9 +227,6 @@ class CrawlEngine:
         self._label(f"r{self.round}:admission")
         p = with_priority(frontier)
         p = robots_filter(p, self.robots)
-        # cache: admitted/deferred/held all branch from p, and each write/
-        # action would otherwise re-execute the canonicalize+window chain
-        p = p.cache()
         if self.blocked_domains:
             # broadcast-join, not a literal array: plan size stays constant
             # as the blocked set grows over a long crawl
@@ -245,10 +240,7 @@ class CrawlEngine:
         else:
             held = None
             p_active = p
-        adm_caches: list[DataFrame] = []
-        admitted, deferred = admit_per_domain(
-            p_active, self.robots, c.host_budget, caches=adm_caches
-        )
+        admitted, deferred = admit_per_domain(p_active, self.robots, c.host_budget)
 
         self._label(f"r{self.round}:fetch+score")
         scored = fetch_and_validate(admitted, self.links, self.pages, c.seed, c.validate_pixels)
@@ -256,15 +248,11 @@ class CrawlEngine:
             "caption_score",
             F.when(F.col("caption").isNotNull(), quantize9(self.score_udf(F.col("caption"))))
             .otherwise(F.lit(0.0)),
-        ).cache()  # sequence + offset-counts branch from here; avoid double decode
+        )
         # canonical fetch order WITHOUT a single-partition window: range
         # partition on the sort key, per-partition row_number + offsets
         self._label(f"r{self.round}:sequence")
-        seq_caches: list[DataFrame] = []
-        ledger = with_global_sequence(
-            scored, [F.desc("priority"), F.asc("url_hash")], "fetch_seq",
-            caches=seq_caches,
-        )
+        ledger = with_global_sequence(scored, [F.desc("priority"), F.asc("url_hash")], "fetch_seq")
         # order_key headroom: 10^12 fetches per round before collision
         # (fetch_seq is long; int32 or a 10^6 stride would cap a large
         # cluster's round size)
@@ -283,21 +271,17 @@ class CrawlEngine:
             ),
         )
         self._label(f"r{self.round}:neardup")
-        ledger = self._with_near_dup_flags(ledger, seq_caches).cache()
+        # barrier "ledger": discovery and all three checkpoint writes start
+        # from this one materialized copy
+        ledger = self._with_near_dup_flags(ledger).localCheckpoint()
 
         self._label(f"r{self.round}:discover")
         disc = self._discover_outlinks(ledger)
-        # cache: filter_unseen's bloom split consumes ``resolved`` in TWO
-        # union branches (definitely-unseen + verified), each of which
-        # would re-execute the resolve chain (link join + canonicalize +
-        # dedup window) without the barrier
-        resolved = self._resolve_discoveries(disc).cache()
-        fresh = self.seen.filter_unseen(resolved).cache()
-        # synchronous ON PURPOSE: this action materializes the round's
-        # cache spine (ledger -> discoveries -> fresh); deferring it into
-        # the checkpoint pool made all four actions race to build the same
-        # un-materialized caches (measured 44 vs 56 URLs/s) — the writes
-        # parallelize well only once they read warm caches
+        # barrier "fresh": materialized BEFORE seen.add appends these hashes
+        # and rebroadcasts the filter; a lazy re-run of the probe after the
+        # append would test the round's new URLs against a set that now
+        # holds them. The append and the next frontier read this copy.
+        fresh = self.seen.filter_unseen(self._resolve_discoveries(disc)).localCheckpoint()
         self._label(f"r{self.round}:seen-add")
         self._seen_total += self.seen.add(fresh.select("url_hash"), assume_new=True)
 
@@ -308,9 +292,6 @@ class CrawlEngine:
         next_frontier = deferred.select(*fresh.columns).unionByName(fresh)
         if held is not None:
             next_frontier = next_frontier.unionByName(held.select(*fresh.columns))
-        self._round_caches = [p, scored, resolved, fresh, *adm_caches, *seq_caches,
-                              *self._pending_caches]  # unpersisted after checkpoint
-        self._pending_caches = []
         return ledger, next_frontier
 
     def _reps_path(self) -> str:
@@ -319,7 +300,7 @@ class CrawlEngine:
     def _reps_exists(self) -> bool:
         return table_exists(self._reps_path())
 
-    def _with_near_dup_flags(self, ledger: DataFrame, caches: list[DataFrame]) -> DataFrame:
+    def _with_near_dup_flags(self, ledger: DataFrame) -> DataFrame:
         """phash near-dup suppression wired into the round (north rule):
         ``dup_of`` = order_key of the earliest near-duplicate across ALL
         rounds so far. The prior-rounds side is the MAINTAINED
@@ -333,18 +314,14 @@ class CrawlEngine:
         equally near), which is the same argument suppress_near_dups
         itself uses for its exact-dup collapse.
 
-        The suppression plan branches from its input ~5 times (reps window,
-        two band sides, verdict map-back), so it runs over a SLIM CACHED
-        (order_key, phash) frame and the verdict joins back to the wide
-        ledger by order_key — never dragging ledger columns through the
-        band shuffles."""
+        The suppression runs over the slim (order_key, phash) frame and the
+        verdict joins back to the wide ledger by order_key — never dragging
+        ledger columns through the band shuffles."""
         slim = ledger.select("order_key", "phash")
         if self._reps_exists():
             slim = slim.unionByName(
                 read_table(self.spark, self._reps_path()).select("order_key", "phash")
             )
-        slim = slim.cache()
-        caches.append(slim)
         flagged = suppress_near_dups(
             slim, "phash", "order_key", self.cfg.near_dup_max_hamming
         ).select("order_key", "dup_of")
@@ -356,59 +333,29 @@ class CrawlEngine:
         """Run ``rounds`` crawl rounds (default: the configured total).
         A resumed engine passes ``frontier=resumed_frontier()`` and the
         number of REMAINING rounds."""
-        c = self.cfg
-        # SCALE-ADAPTIVE shuffle width for the crawl loop (guide §2):
-        # round frames are bounded by the URL universe (<= ~n_urls slim
-        # fixed-width rows), while the session's shuffle setting is sized
-        # for the analytics tables — at sandbox scale that left every one
-        # of the ~50 stages per round scheduling a full session-width task
-        # wave over a few thousand rows (pure scheduling latency; measured
-        # ~150 jobs per 2-round crawl). Derive the width from the input
-        # size (~4k rows/partition), never ABOVE the session setting (a
-        # 10^9-URL frontier keeps the cluster's own width), and restore
-        # the session value on exit. The decode stage is unaffected: its
-        # width is pinned separately to defaultParallelism because its
-        # cost is per-image CPU, not bytes (operators/fetch.py).
-        conf = self.spark.conf
-        prev_parts = conf.get("spark.sql.shuffle.partitions")
-        target = max(4, -(-c.n_urls // 4000))
-        try:
-            target = min(int(prev_parts), target)
-        except (TypeError, ValueError):
-            pass
-        conf.set("spark.sql.shuffle.partitions", str(target))
-        # Bound AQE's per-update plan strings for the crawl's nested cache
-        # spine (see session.py) — also applied here because the engine
-        # may run inside a FOREIGN session (the driver's correctness
-        # harness builds its own) whose default is unbounded: measured a
-        # 1 GiB-heap OOM inside plan-string rendering without it.
-        prev_plan_len = conf.get("spark.sql.maxPlanStringLength", None)
-        conf.set("spark.sql.maxPlanStringLength", str(256 * 1024))
-        try:
-            if frontier is None:
-                self.seen.enable_empty_bloom()
-                frontier = self.seed_frontier()
-            for _ in range(c.rounds if rounds is None else rounds):
-                ledger, frontier = self.run_round(frontier)
-                self._checkpoint(ledger, frontier)
-                # CUT LINEAGE: continue from the materialized snapshot, not
-                # the in-memory plan — otherwise round N re-executes rounds
-                # 1..N-1 inside every action (measured 10x+ blowup by round
-                # 3). This is exactly what Iceberg snapshot-per-round gives
-                # on a cluster.
-                self._label(f"r{self.round}:reload")
-                frontier = read_table(
-                    self.spark, os.path.join(self.dir, f"frontier/r{self.round}")
-                )
-                self._label(f"r{self.round}:unpersist")
-                ledger.unpersist()
-                for df in getattr(self, "_round_caches", []):
-                    df.unpersist()
-                self.round += 1
-        finally:
-            conf.set("spark.sql.shuffle.partitions", prev_parts)
-            if prev_plan_len is not None:
-                conf.set("spark.sql.maxPlanStringLength", prev_plan_len)
+        persistent = self.spark.sparkContext._jsc.getPersistentRDDs
+        before = set(persistent().keys())
+        if frontier is None:
+            self.seen.enable_empty_bloom()
+            frontier = self.seed_frontier()
+        for _ in range(self.cfg.rounds if rounds is None else rounds):
+            ledger, frontier = self.run_round(frontier)
+            self._checkpoint(ledger, frontier)
+            # CUT LINEAGE: continue from the materialized snapshot, not
+            # the in-memory plan — otherwise round N re-executes rounds
+            # 1..N-1 inside every action (measured 10x+ blowup by round
+            # 3). This is exactly what Iceberg snapshot-per-round gives
+            # on a cluster.
+            self._label(f"r{self.round}:reload")
+            frontier = read_table(
+                self.spark, os.path.join(self.dir, f"frontier/r{self.round}")
+            )
+            # the round is committed: free its barriers' blocks (the
+            # seed's too), which DataFrame.unpersist() does not reach
+            for rid, rdd in persistent().items():
+                if rid not in before and rdd.rdd().isLocallyCheckpointed():
+                    rdd.unpersist(False)
+            self.round += 1
 
     def _checkpoint(self, ledger: DataFrame, frontier: DataFrame) -> None:
         r = self.round
@@ -427,7 +374,7 @@ class CrawlEngine:
         # maintain the phash-representative side table: one (order_key,
         # phash) row per phash value first seen this round (order_keys are
         # monotone in round, so appends never supersede an existing rep).
-        # Derived from the CACHED in-memory ledger — re-reading the
+        # Derived from the materialized ledger — re-reading the
         # just-written parquet cost a second full-ledger scan per round
         # (the r3 formulation); the prior-reps anti-join side stays a lazy
         # slim parquet scan inside this one append job.
@@ -441,8 +388,8 @@ class CrawlEngine:
             new_reps = new_reps.join(prior, "phash", "left_anti")
 
         # The three snapshot writes are INDEPENDENT — disjoint target
-        # paths, all reading frames the round already materialized into
-        # caches (ledger / fresh / admission) — so they overlap in a small
+        # paths, the ledger and the frontier's fresh rows read from the
+        # round's barriers — so they overlap in a small
         # thread pool (guide §2.6: actions are only sequential because the
         # driver calls them sequentially; FIFO scheduling back-fills one
         # write's task tail with the next write's tasks). State mutations
