@@ -17,24 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Importing the plan modules populates the registry. ORDER MATTERS for
-# evidence: the driver's correctness report covers the first 50 entries of
-# queries(), so the SURVEY-§2 core (relational 17 + crawl_ops 16 = 33
-# slots) registers BEFORE the pipeline extensions — round 5 had
-# pipeline_ops (31) first, which silently pushed 14 core queries
-# (incl. crawl_round_smoke) out of the checked window.
-# tests/test_coverage_doc.py pins the core set inside the first 50.
-from webcrawl_lowres_lang_spark.plans import relational  # noqa: F401
-
-try:  # optional modules appear as the build progresses
-    from webcrawl_lowres_lang_spark.plans import crawl_ops  # noqa: F401
-except ImportError:
-    pass
-try:
-    from webcrawl_lowres_lang_spark.plans import pipeline_ops  # noqa: F401
-except ImportError:
-    pass
-
+# Importing the plan modules populates the registry.
+from webcrawl_lowres_lang_spark.plans import crawl_ops, relational  # noqa: F401
 from webcrawl_lowres_lang_spark.plans.registry import REGISTRY
 
 SF0001 = "/root/testdata/sf0.001"

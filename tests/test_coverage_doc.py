@@ -33,12 +33,9 @@ def test_coverage_md_cites_only_live_registry_names():
     assert not stale, f"COVERAGE.md cites names missing from REGISTRY: {stale}"
 
 
-# The driver's correctness artifact covers the FIRST 50 entries of
-# __spark_entry__.queries() (registry insertion order). Round 5 registered
-# pipeline_ops before crawl_ops and silently pushed 14 SURVEY-§2 core
-# queries — including crawl_round_smoke — out of the checked window
-# (VERDICT r5 "What's wrong #1"). This pin makes any future registration
-# reshuffle that displaces a core query a test failure.
+# The driver contract is exactly the SURVEY-§2 core: a plan module that
+# registers an extra query, or loses a core one, fails this pin. The
+# whole of queries() is the driver's correctness window.
 _SURVEY_CORE = [
     # plans/relational.py (17)
     "s1_scan_filter_project", "f2_substring_exclusion", "j1_join_group_agg",
@@ -58,10 +55,8 @@ _SURVEY_CORE = [
 
 
 def test_survey_core_inside_driver_correctness_window():
-    # the registry is insertion-ordered PER PROCESS, and pytest modules
-    # import the plan modules in their own order — the driver's order is
-    # whatever a fresh `import __spark_entry__` produces, so ask exactly
-    # that in a subprocess
+    # the registry is per process and this module imports pipeline_ops, so
+    # ask a fresh `import __spark_entry__` — exactly what the driver sees
     import json
     import subprocess
     import sys
@@ -73,13 +68,6 @@ def test_survey_core_inside_driver_correctness_window():
          "import __spark_entry__ as e; print(json.dumps(list(e.queries())))" % repo],
         capture_output=True, text=True, check=True,
     )
-    order = json.loads(out.stdout.strip().splitlines()[-1])
-    missing = sorted(set(_SURVEY_CORE) - set(order))
-    assert not missing, f"SURVEY core queries missing from REGISTRY: {missing}"
-    first50 = set(order[:50])
-    displaced = [n for n in _SURVEY_CORE if n not in first50]
-    assert not displaced, (
-        "SURVEY-core queries displaced out of the driver's 50-slot "
-        f"correctness window: {displaced} (fix plan-module import order "
-        "in __spark_entry__.py)"
-    )
+    names = json.loads(out.stdout.strip().splitlines()[-1])
+    assert len(names) == len(set(names))
+    assert set(names) == set(_SURVEY_CORE)

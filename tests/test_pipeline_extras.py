@@ -291,55 +291,6 @@ def test_perplexity_reference_split_scores_lower(spark):
     assert means[True] < means[False]
 
 
-def test_host_authority_matches_python_twin(spark):
-    # third implementation: dense-vector PageRank in pure python over the
-    # same deterministic doc_id-derived edge list.
-    import hashlib
-
-    from webcrawl_lowres_lang_spark.plans.pipeline_ops import (
-        _PR_DAMP,
-        _PR_HOSTS,
-        _PR_ITERS,
-    )
-
-    con = duckdb.connect()
-    try:
-        ids = [
-            r[0]
-            for r in con.execute(
-                f"SELECT doc_id FROM '{SF_DIR}/documents.parquet'"
-            ).fetchall()
-        ]
-    finally:
-        con.close()
-    h, d = _PR_HOSTS, _PR_DAMP
-    w: dict[tuple, int] = {}
-    for doc_id in ids:
-        src = doc_id % h
-        dst = int(hashlib.md5(f"{doc_id}e".encode()).hexdigest()[:15], 16) % h
-        if src != dst:
-            w[(src, dst)] = w.get((src, dst), 0) + 1
-    od = {}
-    for (src, _), c in w.items():
-        od[src] = od.get(src, 0) + c
-    r = [1.0 / h] * h
-    for _ in range(_PR_ITERS):
-        dang = sum(r[i] for i in range(h) if i not in od)
-        contrib = [0.0] * h
-        for (src, dst), c in w.items():
-            contrib[dst] += (c * 1.0 / od[src]) * r[src]
-        r = [(1.0 - d) / h + d * (contrib[j] + dang / h) for j in range(h)]
-    out = REGISTRY["graph_host_authority"].fn(spark, SF_DIR).collect()
-    assert len(out) == h
-    total = 0.0
-    for row in out:
-        assert abs(row["rank"] - r[row["host_id"]]) < 1e-6, row["host_id"]
-        assert row["out_edges"] == od.get(row["host_id"], 0)
-        total += row["rank"]
-    # probability-mass invariant: ranks stay a distribution at every step
-    assert abs(total - 1.0) < 1e-6
-
-
 def test_semdedup_numpy_twin(spark):
     """Third implementation of semdedup_embedding (numpy over the raw
     parquet): quantize -> integer Lloyd (seed-assign, elementwise-sum

@@ -108,9 +108,7 @@ def test_topk_uses_take_ordered(spark):
 
 
 def test_no_cartesian_anywhere(spark):
-    # every registered plan must avoid cartesian products (the ann_* queries
-    # use inequality-filtered broadcast joins: BroadcastNestedLoop is
-    # acceptable only when one side is a handful of broadcast query rows)
+    # every registered plan must avoid cartesian products
     for name in REGISTRY:
         if name == "crawl_round_smoke":
             continue  # runs a full crawl; plan built at runtime

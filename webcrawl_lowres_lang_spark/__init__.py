@@ -10,10 +10,11 @@ Layout
 - ``functions/``   scalar/vectorized column functions (URL canon, hashing,
                    tokenization, imaging)
 - ``sources/``     fixture generators + snapshot-table storage layer
-- ``operators/``   seen-set, frontier, politeness, fetch, scoring, dedup,
-                   similarity, text-stats
-- ``plans/``       analytics query library (the reference's display/stats
-                   queries re-expressed as DataFrame plans)
+- ``operators/``   seen-set, ordering, politeness, fetch, extraction,
+                   scoring, near-dup suppression
+- ``plans/``       driver-contract query library (the reference's SQL and
+                   crawl operators as DataFrame plans with DuckDB oracles)
+                   plus training-data dedup/text/sampling operators
 - ``streaming/``   incremental crawl-round loop + checkpoint/resume
 """
 

@@ -43,13 +43,6 @@ def hrand(seed: int, *cols: Column | str) -> Column:
     return (h.cast("double") + F.lit(_TWO63)) / F.lit(_TWO64)
 
 
-def hrandint(seed: int, low: int, high: int, *cols: Column | str) -> Column:
-    """Uniform int in [low, high] inclusive (reference analog:
-    ``random.randint`` at lrl-crawler.py:333)."""
-    span = high - low + 1
-    return (F.pmod(hash64(seed, *cols), F.lit(span)) + F.lit(low)).cast("int")
-
-
 def quantize9(col: Column) -> Column:
     """Quantize a double to 9dp with pure float64 ops: floor(x*1e9+0.5)/1e9.
 

@@ -109,10 +109,11 @@ def canonicalize_one(url: str | None) -> str | None:
     path = quote(path, safe="/:@!$&'()*+,;=-._~%")
     path = _remove_dot_segments(path)
     query = ""
-    if parts.query:
-        pairs = [kv for kv in parts.query.split("&") if kv]
-        pairs = sorted(_normalize_pct(kv) for kv in pairs)
-        query = "?" + "&".join(pairs)
+    # a query of bare '&' separators has no pairs: drop the '?' too, or a
+    # second pass would strip it and canonicalization would not be idempotent
+    pairs = [kv for kv in parts.query.split("&") if kv]
+    if pairs:
+        query = "?" + "&".join(sorted(_normalize_pct(kv) for kv in pairs))
     return f"{scheme}://{userinfo}{host}{port}{path}{query}"
 
 

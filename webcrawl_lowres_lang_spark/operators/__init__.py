@@ -1,3 +1,3 @@
-"""Engine operators: URL-seen set (Bloom + exact), priority frontier,
-politeness scheduler, synthetic fetcher, language scoring, dedup,
-similarity search, text statistics."""
+"""Engine operators: URL-seen set (Bloom + cuckoo), global ordering,
+politeness scheduler, synthetic fetcher, document extraction, language
+scoring, near-dup suppression."""

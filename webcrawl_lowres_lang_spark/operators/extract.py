@@ -1,7 +1,6 @@
 """Document text extraction stage (SURVEY S17-S19 / U3; reference
 ``nlp.py:90-115``): opaque document ``binary`` + doc_type -> plain text,
-in Arrow batches via ``mapInPandas`` — the same stub-boundary pattern as
-operators/multimodal.py.
+in Arrow batches via ``mapInPandas``.
 
 What is REAL here (and tested): the batch plumbing, schemas, and the HTML
 extractor — a dependency-free re-expression of the reference's

@@ -35,13 +35,6 @@ _DECODED_SCHEMA = (
     "phash long, phash_ok boolean, psnr_db double, file_sha256 string"
 )
 
-FETCH_RESULT_COLS = (
-    "url_id long, url_canon string, url_hash long, domain string, depth int, "
-    "relevance double, priority double, status int, image_id string, "
-    "fmt string, caption string, phash long, phash_ok boolean, psnr_db double, "
-    "file_sha256 string, w int, h int"
-)
-
 
 def decode_validate_images(pages_subset: DataFrame, seed: int, validate_pixels: bool) -> DataFrame:
     """Distinct content items -> decoded/validated attributes (one row per

@@ -38,7 +38,6 @@ _CANON_URL_SQL = "'http://' || lower(source) || '.example.com/a/doc/' || doc_id:
     FROM documents
     """,
     survey_ref="C1,C3,F3,U7",
-    tags=("crawl",),
 )
 def c1_c3_url_canonicalize_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The REAL canonicalizer pandas UDF runs on the Spark side; the oracle
@@ -71,7 +70,6 @@ def c1_c3_url_canonicalize_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE url LIKE 'http%' AND NOT (url LIKE '%tracker%' OR url LIKE '%adserver%')
     """,
     survey_ref="F2,F3,C18",
-    tags=("crawl",),
 )
 def f2_f3_guards(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Relative-URL guard (engine: canonicalizer returns NULL) + excluded-
@@ -110,7 +108,6 @@ def f2_f3_guards(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents GROUP BY source
     """,
     survey_ref="A8,C3",
-    tags=("crawl",),
 )
 def a8_domain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Reference: Python-loop domain counting (sql.py:884-940) -> one groupBy
@@ -141,7 +138,6 @@ _TOKENS_SQL = "list_filter(string_split(regexp_replace(lower(text), '[^a-z0-9 ]'
     LIMIT 20
     """,
     survey_ref="A10,F6,C8,C9",
-    tags=("crawl", "text"),
 )
 def a10_token_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Lexicon building: Counter.most_common (extract.py:72-78) -> explode +
@@ -178,7 +174,6 @@ def a10_token_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY tok
     """,
     survey_ref="A11,E1",
-    tags=("crawl", "text"),
 )
 def a11_lexicon_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Lexicon growth: merge-sum of core + topup frequency dicts
@@ -213,7 +208,6 @@ def a11_lexicon_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT tok FROM de WHERE tok NOT IN (SELECT tok FROM en)
     """,
     survey_ref="J7,E3",
-    tags=("crawl", "text"),
 )
 def j7_lexicon_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LRL-lexicon minus English dictionary (queries.py:57-70) as left_anti.
@@ -258,7 +252,6 @@ def j7_lexicon_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM scored GROUP BY doc_id
     """,
     survey_ref="A13,C7,C10,C13,F7,U4",
-    tags=("crawl", "text"),
 )
 def a13_paragraph_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Paragraph pipeline (nlp.py:276-388): split -> explode -> min-length
@@ -324,7 +317,6 @@ def a13_paragraph_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cls
     """,
     survey_ref="A14,A15",
-    tags=("crawl", "text"),
 )
 def a14_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Detector-agreement P/R counters (nlp.py:254-259,352-365,437-446):
@@ -371,7 +363,6 @@ def a14_precision_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rn <= 3
     """,
     survey_ref="W9,T5",
-    tags=("crawl",),
 )
 def w9_priority_frontier_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The frontier-admission window shape (per-domain top-k under budget)
@@ -398,7 +389,6 @@ def w9_priority_frontier_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rn = 1
     """,
     survey_ref="S8,S9,T6",
-    tags=("crawl",),
 )
 def s8_latest_state_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The engine's replacement for the reference's per-row UPDATE flags
@@ -421,7 +411,6 @@ def s8_latest_state_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l.l_returnflag
     """,
     survey_ref="T5",
-    tags=("crawl",),
 )
 def t5_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Skew-defusing salted join, made explicit (the crawl engine uses the
@@ -452,7 +441,6 @@ def t5_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders WHERE o_orderkey = 7
     """,
     survey_ref="S5",
-    tags=("crawl",),
 )
 def s5_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Point lookup by primary key (sql.py:161-165): a literal equality
@@ -495,7 +483,6 @@ def s5_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l.rn = 1
     """,
     survey_ref="S10,S8",
-    tags=("crawl",),
 )
 def s10_bulk_reset(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Bulk reset (sql.py:312-334: "set all rows unhandled") as the engine
@@ -558,7 +545,6 @@ _C4_URL_SQL = (
     WHERE len(api_key) > 0 AND NOT regexp_matches(api_key, '^\?+$')
     """,
     survey_ref="C4,C5,C11,F10,C3",
-    tags=("crawl",),
 )
 def search_connector_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The search-connector scalar surface in one query (consolidated from
@@ -610,7 +596,6 @@ def search_connector_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE len(trim(text)) > 0
     """,
     survey_ref="S17,U3,F8",
-    tags=("crawl", "text"),
 )
 def u3_text_extract_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     # REAL html extraction through the mapInPandas stage (operators/
@@ -662,7 +647,6 @@ _FIXTURES_DIR = os.path.join(_REPO_ROOT, "tests", "fixtures")
     FROM read_parquet('{os.path.join(_FIXTURES_DIR, "crawl_smoke_expected.parquet")}')
     """,
     survey_ref="T1-T7,J5,W9,U2,U6,U8",
-    tags=("crawl",),
 )
 def crawl_round_smoke(spark: SparkSession, sf_dir: str) -> DataFrame:
     # One politeness-budgeted crawl round over the synthetic web: returns

@@ -1,7 +1,7 @@
 """Training-data pipeline operators over the driver tables: deduplication
 (exact / MinHash-LSH / SimHash / n-gram Jaccard / embedding-cosine),
-similarity search (brute-force + bucketed ANN), and text analysis
-(token stats, quality scoring, n-gram language-ID, fingerprinting).
+semantic dedup, and text analysis (token stats, quality scoring, n-gram
+language-ID, fingerprinting).
 
 These extend the reference's dedup machinery (URL-hash seen set J5,
 content-hash clone J6) to the content-level dedup a 100 TB training-data
@@ -22,23 +22,16 @@ Cross-engine determinism rules used throughout:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .registry import REGISTRY, load, register
 
-# repo root derived from THIS file so oracle fixture paths survive any
-# checkout location (the round-4 form hardcoded /root/repo)
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_FIXTURES_DIR = os.path.join(_REPO_ROOT, "tests", "fixtures")
-
 # Intermediate frames persisted by query builders (text_langid_ngram's gram
 # aggregation). A registered query fn returns a LAZY DataFrame, so the
 # builder cannot unpersist before the caller's action runs; callers that
-# invoke queries repeatedly in one session (bench.py's cold/warm/tenx legs)
-# call release_persisted() after each consuming action.
+# invoke queries repeatedly in one session call release_persisted() after
+# each consuming action.
 _PERSISTED: list[DataFrame] = []
 
 
@@ -129,7 +122,6 @@ _DOCS_MUTATED_SQL = f"""
     FROM corpus GROUP BY md5(text) HAVING COUNT(*) > 1
     """,
     survey_ref="J6,A3",
-    tags=("dedup",),
 )
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Exact content dedup: hash-groupBy, keep the earliest exemplar
@@ -195,15 +187,6 @@ def _gram_hash_sql(th_col: str, i_expr: str, k: int) -> str:
     ``i_expr`` of the token-hash array ``th_col``."""
     args = ", ".join(f"element_at({th_col}, {i_expr} + {j})" for j in range(k))
     return f"xxhash64({args})"
-
-
-def _shingles(tokens_col):
-    """Word-3-gram shingle array (string form — used by the Jaccard
-    inverted index, NOT by minhash, which composes token hashes instead)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.greatest(F.size(tokens_col) - 3, F.lit(0))),
-        lambda i: F.concat_ws(" ", F.slice(tokens_col, i + 1, 3)),
-    )
 
 
 # These three builders are single F.expr STRINGS, not composed Column
@@ -301,7 +284,6 @@ def _minhash_pair_ctes(corpus_sql: str) -> str:
     SELECT doc_a, doc_b FROM pairs
     """,
     survey_ref="J5,J6",
-    tags=("dedup",),
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MinHash+LSH near-dup candidates: shingle -> minhash -> band -> bucket
@@ -532,7 +514,6 @@ def connected_components(pairs: DataFrame, max_iters: int = 30) -> DataFrame:
     FROM lab
     """,
     survey_ref="J6,T5",
-    tags=("dedup",),
 )
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Transitive dup clusters: minhash-LSH candidate pairs -> alternating
@@ -612,7 +593,6 @@ _SIMHASH_FOLD_SQL = " + ".join(
     WHERE bit_count(xor(a.simhash, b.simhash)) <= 16
     """,
     survey_ref="J6,C1",
-    tags=("dedup",),
 )
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # SimHash: per-token 60-bit hash votes ±1 per bit; near-dups land within
@@ -701,7 +681,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE i * 1.0 / (sa.n + sb.n - i) >= 0.3
     """,
     survey_ref="J6,A10",
-    tags=("dedup",),
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Exact n-gram Jaccard via shingle-set inverted index (explode + equi-join
@@ -808,12 +787,10 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE list_cosine_similarity(a.v, b.v) >= 0.8
     """,
     survey_ref="A12",
-    tags=("dedup", "similarity"),
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Embedding near-dup on known candidate pairs (original ↔ shifted copy).
-    # The blocked/bucketed general pairing is ann_bucketed_topk below; this
-    # verifies the cosine kernel itself (zip_with dot product, JVM-side).
+    # Verifies the cosine kernel itself (zip_with dot product, JVM-side).
     base = _widen(load(spark, sf_dir, "embeddings"), "vec_id").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -844,369 +821,21 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Similarity search
+# One exact integer Lloyd iteration (coarse quantizer for semdedup_embedding)
 # ---------------------------------------------------------------------------
-
-
-@register(
-    "ann_bruteforce_topk",
-    oracle="""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-    scored AS (
-      SELECT q.query_id, e.vec_id AS neighbor_id,
-             list_cosine_similarity(q.qv, e.v) AS c
-      FROM q JOIN e ON e.vec_id != q.query_id
-    )
-    SELECT query_id, neighbor_id, ROUND(c, 6) AS cos
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                       ORDER BY c DESC, neighbor_id ASC) AS rn
-          FROM scored) t
-    WHERE rn <= 10
-    """,
-    survey_ref="A12,W1",
-    tags=("similarity",),
-)
-def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Brute-force cosine top-k: broadcast the (tiny) query set against the
-    # corpus — the exact baseline every ANN variant is measured against.
-    # At scale: corpus stays partitioned, queries broadcast, per-partition
-    # top-k then global top-k (TakeOrdered) — no corpus shuffle.
-    e = _widen(load(spark, sf_dir, "embeddings"), "vec_id").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    j = e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-    dot = F.aggregate(F.zip_with("qv", "v", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-    nq = F.sqrt(F.aggregate(F.transform("qv", lambda x: x * x), F.lit(0.0), lambda a, x: a + x))
-    nv = F.sqrt(F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0), lambda a, x: a + x))
-    scored = j.select(
-        "query_id", F.col("vec_id").alias("neighbor_id"), (dot / (nq * nv)).alias("c")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("c"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 10)
-        .select("query_id", "neighbor_id", F.round("c", 6).alias("cos"))
-    )
-
-
-@register(
-    "ann_bucketed_topk",
-    oracle="""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v, label FROM embeddings),
-    q AS (SELECT vec_id AS query_id, v AS qv, label AS qlabel FROM e WHERE vec_id < 5),
-    scored AS (
-      SELECT q.query_id, e.vec_id AS neighbor_id,
-             list_cosine_similarity(q.qv, e.v) AS c
-      FROM q JOIN e ON e.label = q.qlabel AND e.vec_id != q.query_id
-    )
-    SELECT query_id, neighbor_id, ROUND(c, 6) AS cos
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                       ORDER BY c DESC, neighbor_id ASC) AS rn
-          FROM scored) t
-    WHERE rn <= 5
-    """,
-    survey_ref="A12,W1",
-    tags=("similarity",),
-)
-def ann_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # IVF-style scale path: probe only the query's coarse bucket (here the
-    # precomputed ``label`` plays the centroid-assignment role). At 100 TB
-    # the corpus is hash/bucket-partitioned by cell id, so each query scans
-    # one cell instead of the corpus — same plan shape as this query.
-    e = _widen(load(spark, sf_dir, "embeddings"), "vec_id").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v"), "label"
-    )
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), F.col("label").alias("qlabel")
-    )
-    j = e.join(
-        F.broadcast(q), (F.col("label") == F.col("qlabel")) & (F.col("vec_id") != F.col("query_id"))
-    )
-    dot = F.aggregate(F.zip_with("qv", "v", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
-    nq = F.sqrt(F.aggregate(F.transform("qv", lambda x: x * x), F.lit(0.0), lambda a, x: a + x))
-    nv = F.sqrt(F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0), lambda a, x: a + x))
-    scored = j.select(
-        "query_id", F.col("vec_id").alias("neighbor_id"), (dot / (nq * nv)).alias("c")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("c"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("query_id", "neighbor_id", F.round("c", 6).alias("cos"))
-    )
-
-
-# Random-hyperplane LSH for embedding near-dup (general pairing, not just
-# known candidate pairs): H deterministic ±1 hyperplanes; sign of the exact
-# integer dot product gives one signature bit; signatures band into buckets;
-# only bucket-sharing pairs are verified. Verification is ALSO exact
-# integer math: cos(a,b) >= 0.8 <=> dot > 0 AND 100*dot^2 >= 64*|a|^2*|b|^2
-# (movable to any rational threshold) — no float anywhere, so both engines
-# agree bit-for-bit.
-#
-# SCALE-AWARE SIGNATURE WIDTH (closes BASELINE.md's round-3 6.9x flag):
-# per-band bit width bb is derived FROM THE CORPUS SIZE — the smallest bb
-# in [2, 16] with n <= 32 * 2^bb — so each band's bucket count tracks
-# n / 32 and mean bucket occupancy stays ~O(32) instead of packing 10x
-# the vectors into a fixed 2x256 buckets (candidate pairs grow with
-# occupancy^2). The ladder is exact integer logic, expressed identically
-# as Python (Spark side) and a CASE ladder over a COUNT(*) scalar
-# subquery (DuckDB side) — no float log2 on either engine, so both always
-# derive the same width. The 16-bit cap is the sandbox bound tied to
-# _EMB_MAX_H = 32 generated planes; at 10^10 vectors you raise the cap
-# and let the same plane generator emit log2(n)+~10 rows (band COUNT
-# could scale too to hold recall; 2 bands is the sandbox setting).
-_EMB_BANDS = 2
-_EMB_MAX_BB = 16
-_EMB_MAX_H = _EMB_BANDS * _EMB_MAX_BB
-_EMB_OCC_TARGET = 32  # design mean bucket occupancy per band
-_EMB_DIM = 64
-_EMB_PLANES: list[list[int]] = []
-_ps = 0xBEEF
-for _h in range(_EMB_MAX_H):
-    row = []
-    for _d in range(_EMB_DIM):
-        _ps = (_ps * 6364136223846793005 + 1442695040888963407) % 2**63
-        row.append(1 if (_ps >> 17) & 1 else -1)
-    _EMB_PLANES.append(row)
-
-
-def emb_band_bits(n_vectors: int) -> int:
-    """Smallest bb in [2, _EMB_MAX_BB] with n <= _EMB_OCC_TARGET * 2^bb."""
-    for bb in range(2, _EMB_MAX_BB + 1):
-        if n_vectors <= _EMB_OCC_TARGET << bb:
-            return bb
-    return _EMB_MAX_BB
-
-
-def _emb_plane_sql(row: list[int]) -> str:
-    return "[" + ", ".join(str(p) for p in row) + "]"
-
-
-def _emb_corpus(base: DataFrame) -> DataFrame:
-    """(vec_id, qv): quantized corpus = originals + perturbed twins."""
-    # expr strings (one py4j round trip each) — the lambda-composed form
-    # cost ~0.3s of driver build time per call, twice per query build.
-    # 0.05D: the D suffix keeps the literal a DOUBLE (bare 0.05 parses as
-    # DECIMAL(3,2) in SQL and would change the float math vs the oracle).
-    base = _widen(base, "vec_id")
-    return base.selectExpr(
-        "vec_id",
-        "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT)) AS qv",
-    ).unionByName(
-        base.selectExpr(
-            "vec_id + 1000000L AS vec_id",
-            "transform(embedding, x -> CAST(floor((CAST(x AS DOUBLE) + 0.05D) * 1000) AS BIGINT)) AS qv",
-        )
-    )
-
-
-def emb_band_table(base: DataFrame) -> tuple[DataFrame, int]:
-    """(bands, bb): the (vec_id, band_idx, band_val) LSH band table over
-    the corpus built from ``base``, with the corpus-size-derived per-band
-    width bb. Only 2*bb of the _EMB_MAX_H plane dots are computed. BOTH
-    bands emerge from one explode over one sigs pass — a per-band union
-    would recompute the plane dots once per band, and an a/b band
-    self-join would double it again (alias-divergent branches defeat
-    ReusedExchange)."""
-    # metadata-only count (parquet footers) — the one scalar the plan needs
-    bb = emb_band_bits(2 * base.count())
-    corpus = _emb_corpus(base)
-
-    # Single expr STRINGS, not composed Column lambdas: the Column form
-    # built ~64 F.lit calls per plane x 2*bb planes (~900 py4j round trips
-    # — measured 2-4s of pure driver build time per invocation, dwarfing
-    # the sub-second execution); each selectExpr below is ONE round trip.
-    # Semantics identical (same plane literals, same integer math).
-    def plane_dot_sql(row: list[int]) -> str:
-        arr = ", ".join(str(p) for p in row)
-        return (
-            f"aggregate(zip_with(qv, array({arr}), (a, b) -> a * b), "
-            f"0L, (acc, x) -> acc + x) >= 0"
-        )
-
-    sigs = corpus.selectExpr(
-        "vec_id",
-        *[
-            f"({plane_dot_sql(_EMB_PLANES[h])}) AS b{h}"
-            for h in range(_EMB_BANDS * bb)
-        ],
-    )
-
-    def band_val_sql(b: int) -> str:
-        # absolute bit weights (1 << h) — matches the width-independent
-        # DuckDB band expression; equality classes are weight-invariant
-        return " + ".join(
-            f"IF(b{h}, {1 << h}L, 0L)" for h in range(b * bb, (b + 1) * bb)
-        )
-
-    struct_sql = ", ".join(
-        f"struct({b} AS band_idx, CAST({band_val_sql(b)} AS BIGINT) AS band_val)"
-        for b in range(_EMB_BANDS)
-    )
-    bands = sigs.select(
-        "vec_id", F.expr(f"inline(array({struct_sql}))")
-    )
-    return bands, bb
-
-
-_EMB_CORPUS_SQL = """
-      SELECT vec_id,
-             list_transform(embedding, x -> CAST(floor(x::DOUBLE * 1000) AS BIGINT)) AS qv
-      FROM embeddings
-      UNION ALL
-      SELECT vec_id + 1000000 AS vec_id,
-             list_transform(embedding, x -> CAST(floor((x::DOUBLE + 0.05) * 1000) AS BIGINT)) AS qv
-      FROM embeddings
-"""
-
-_EMB_BITS_SQL = ", ".join(
-    f"(list_sum(list_transform(range(1, {_EMB_DIM} + 1), "
-    f"i -> qv[i] * ({_emb_plane_sql(row)})[i])) >= 0) AS b{h}"
-    for h, row in enumerate(_EMB_PLANES)
-)
-# same bb ladder as emb_band_bits, over a corpus-count scalar subquery
-_EMB_BB_SQL = (
-    "CASE "
-    + " ".join(
-        f"WHEN (SELECT COUNT(*) FROM corpus) <= {_EMB_OCC_TARGET << bb} THEN {bb}"
-        for bb in range(2, _EMB_MAX_BB)
-    )
-    + f" ELSE {_EMB_MAX_BB} END"
-)
-# band b holds planes [b*bb, (b+1)*bb), weighted by ABSOLUTE bit position
-# (1<<h): equality classes are unchanged by the weighting, and absolute
-# weights keep the SQL terms width-independent (terms outside the band's
-# range contribute 0 via the h-range CASE guard)
-_EMB_BAND_SQL = {
-    b: "("
-    + " + ".join(
-        f"(CASE WHEN b{h} AND {h} >= {b} * __bb AND {h} < {b + 1} * __bb "
-        f"THEN {1 << h} ELSE 0 END)"
-        for h in range(_EMB_MAX_H)
-    )
-    + ")"
-    for b in range(_EMB_BANDS)
-}
-
-
-@register(
-    "dedup_embedding_lsh",
-    oracle=f"""
-    WITH corpus AS ({_EMB_CORPUS_SQL}),
-    params AS (SELECT ({_EMB_BB_SQL}) AS __bb),
-    sigs AS (
-      SELECT vec_id, qv, {_EMB_BITS_SQL},
-             CAST(list_sum(list_transform(qv, x -> x * x)) AS BIGINT) AS n2
-      FROM corpus
-    ),
-    bands AS (
-      SELECT vec_id, 0 AS band_idx, {_EMB_BAND_SQL[0]} AS band_val FROM sigs, params
-      UNION ALL
-      SELECT vec_id, 1 AS band_idx, {_EMB_BAND_SQL[1]} AS band_val FROM sigs, params
-    ),
-    cand AS (
-      SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-      FROM bands a JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_val = b.band_val
-           AND a.vec_id < b.vec_id
-    )
-    SELECT vec_a, vec_b,
-           CAST(list_sum(list_transform(range(1, {_EMB_DIM} + 1),
-                         i -> sa.qv[i] * sb.qv[i])) AS BIGINT) AS qdot
-    FROM cand
-    JOIN sigs sa ON sa.vec_id = vec_a
-    JOIN sigs sb ON sb.vec_id = vec_b
-    WHERE list_sum(list_transform(range(1, {_EMB_DIM} + 1), i -> sa.qv[i] * sb.qv[i])) > 0
-      AND 100 * CAST(list_sum(list_transform(range(1, {_EMB_DIM} + 1),
-                      i -> sa.qv[i] * sb.qv[i])) AS BIGINT)
-              * CAST(list_sum(list_transform(range(1, {_EMB_DIM} + 1),
-                      i -> sa.qv[i] * sb.qv[i])) AS BIGINT)
-          >= 64 * sa.n2 * sb.n2
-    """,
-    survey_ref="A12,J6",
-    tags=("dedup", "similarity"),
-)
-def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # GENERAL embedding near-dup pairing (not just known candidate pairs):
-    # random-hyperplane LSH generates candidates — deterministic ±1
-    # hyperplanes give a sign signature; 2 bands of bb bits bucket the
-    # corpus; only bucket-sharing pairs are verified. Verification is exact
-    # integer math (cos >= 0.8 <=> dot > 0 and 100*dot^2 >= 64*|a|^2*|b|^2),
-    # so both engines agree bit-for-bit with no float accumulation.
-    #
-    # bb derives from the corpus size (emb_band_bits: smallest bb with
-    # n <= 32 * 2^bb, the same integer ladder the DuckDB twin evaluates
-    # over COUNT(*)), so only 2*bb of the _EMB_MAX_H plane dots are ever
-    # computed and mean bucket occupancy stays ~32 at ANY corpus size —
-    # the round-3 fixed-width formulation packed 10x the vectors into the
-    # same 512 buckets and candidate pairs grew superlinearly.
-    #
-    # Scale shape: the band table carries only (band_idx, band_val, vec_id);
-    # vectors join back by id for verification — candidates never exceed
-    # bucket-pair counts, and there is no all-pairs comparison anywhere.
-    base = load(spark, sf_dir, "embeddings")
-    corpus = _emb_corpus(base)
-    bands, _bb = emb_band_table(base)
-
-    def isum(arr):
-        return F.aggregate(arr, F.lit(0).cast("long"), lambda a, x: a + x)
-    cand = (
-        bands.groupBy("band_idx", "band_val")
-        .agg(F.array_sort(F.collect_list("vec_id")).alias("ids"))
-        .filter(F.size("ids") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ids, (x, i) -> "
-                    "transform(slice(ids, i + 2, size(ids) - i - 1), "
-                    "y -> struct(x AS vec_a, y AS vec_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.vec_a", "p.vec_b")
-        .distinct()
-    )
-    # verification needs only (qv, n2) — rebuild the CHEAP quantization
-    # subtree for each join side rather than dragging the plane-dot bits
-    # through; the expensive signature math runs exactly once (in bands)
-    vecs = corpus.selectExpr(
-        "vec_id", "qv",
-        "aggregate(transform(qv, x -> x * x), 0L, (acc, x) -> acc + x) AS n2",
-    )
-    sa = vecs.selectExpr("vec_id AS vec_a", "qv AS qva", "n2 AS na2")
-    sb = vecs.selectExpr("vec_id AS vec_b", "qv AS qvb", "n2 AS nb2")
-    dot = F.expr(
-        "CAST(aggregate(zip_with(qva, qvb, (x, y) -> x * y), 0L, (acc, x) -> acc + x) AS BIGINT)"
-    )
-    return (
-        cand.join(sa, "vec_a")
-        .join(sb, "vec_b")
-        .withColumn("qdot", dot)
-        .filter(
-            (F.col("qdot") > 0)
-            & (100 * F.col("qdot") * F.col("qdot") >= 64 * F.col("na2") * F.col("nb2"))
-        )
-        .select("vec_a", "vec_b", "qdot")
-    )
 
 
 _IVF_K = 8  # coarse-quantizer cells
 _IVF_DIM = 64
 _IVF_SCALE = 1000  # embedding quantization: q = floor(x * 1000)
-_IVF_TOPK = 10
 
 # DuckDB helpers over 1-based list indexing
 _IVF_QV_SQL = "list_transform(embedding, x -> CAST(floor(x::DOUBLE * 1000) AS BIGINT))"
 
 # One exact integer Lloyd iteration as a CTE chain. Assumes a preceding
 # CTE ``q(vec_id, qv)`` (quantized corpus); defines ``a2(vec_id, qv,
-# cell)``. Shared verbatim by the IVF oracle and the SemDeDup oracle so
-# the two queries can never drift on quantizer semantics.
+# cell)``. The SemDeDup oracle embeds it verbatim; _lloyd_assigned is
+# its Spark twin.
 _LLOYD_CTES_SQL = f"""
     seeds AS (SELECT vec_id AS j, qv AS sv FROM q WHERE vec_id < {_IVF_K}),
     -- Lloyd assign #1: exact integer L2 to the seed vectors (c=1)
@@ -1267,9 +896,9 @@ def _isum(arr):
 
 def _lloyd_assigned(e: DataFrame) -> DataFrame:
     """One exact integer Lloyd iteration over ``e(vec_id, qv)`` — the Spark
-    twin of _LLOYD_CTES_SQL, shared by the IVF ops and semdedup_embedding.
-    Returns every (vector, cell) candidate with its rank ``rn`` (rn=1 is
-    the assignment; rn<=nprobe serves multi-cell probing)."""
+    twin of _LLOYD_CTES_SQL used by semdedup_embedding. Returns every
+    (vector, cell) candidate with its rank ``rn`` (rn=1 is the
+    assignment)."""
     seeds = e.filter(F.col("vec_id") < _IVF_K).select(
         F.col("vec_id").alias("j"), F.col("qv").alias("sv")
     )
@@ -1310,162 +939,6 @@ def _lloyd_assigned(e: DataFrame) -> DataFrame:
         .withColumn("__score", num * 1.0 / (F.col("c") * F.col("c")))
         .withColumn(
             "rn", F.row_number().over(w_assign.orderBy(F.asc("__score"), F.asc("cell")))
-        )
-    )
-
-
-@register(
-    "ann_ivf_kmeans_topk",
-    oracle=f"""
-    WITH q AS (
-      SELECT vec_id, {_IVF_QV_SQL} AS qv FROM embeddings
-    ),
-{_LLOYD_CTES_SQL},
-    probes AS (SELECT vec_id AS query_id, qv AS pqv, cell FROM a2 WHERE vec_id < 5),
-    scored AS (
-      SELECT p.query_id, a.vec_id AS neighbor_id,
-             CAST(list_sum(list_transform(range(1, {_IVF_DIM} + 1),
-                           i -> p.pqv[i] * a.qv[i])) AS BIGINT) AS qdot
-      FROM probes p JOIN a2 a ON a.cell = p.cell AND a.vec_id != p.query_id
-    )
-    SELECT query_id, neighbor_id, qdot
-    FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                       ORDER BY qdot DESC, neighbor_id ASC) AS rn
-          FROM scored) t
-    WHERE rn <= {_IVF_TOPK}
-    """,
-    survey_ref="A12,W1",
-    tags=("similarity",),
-)
-def ann_ivf_kmeans_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ivf_topk_impl(spark, sf_dir, nprobe=1)
-
-
-def _ivf_topk_impl(spark: SparkSession, sf_dir: str, nprobe: int = 1) -> DataFrame:
-    # IVF with a LEARNED coarse quantizer (one exact Lloyd iteration), not
-    # precomputed labels: seed centroids = first K vectors, integer-exact
-    # assign -> elementwise-sum update -> reassign, then each query probes
-    # its ``nprobe`` nearest cells (the registered query uses nprobe=1;
-    # the recall/cost knob is exercised by tests/test_relational_oracle.py
-    # at nprobe=2) and ranks by exact integer dot product.
-    #
-    # Exactness design: embeddings quantize to ints (floor(x*1000)); every
-    # distance/argmin is integer math except ONE float division whose
-    # operands are identical exact integers on both engines — so cell
-    # assignments and rankings are bit-reproducible (no float-accumulation
-    # ordering anywhere).
-    #
-    # Scale shape: assignment is |vectors| x K via a broadcast of K centroid
-    # rows (K ~ sqrt(n) real-world; the corpus never shuffles for it);
-    # centroid update is a (cell, dim)-keyed partial aggregation; the probe
-    # join touches one cell per query instead of the corpus.
-    e = _widen(load(spark, sf_dir, "embeddings"), "vec_id").select("vec_id", _ivf_qv_col().alias("qv"))
-    assigned = _lloyd_assigned(e)
-    a2 = assigned.filter(F.col("rn") == 1).select("vec_id", "qv", "cell")
-    # probe side re-derives from the ranking with vec_id < 5 pushed below
-    # the broadcast cross join — 5 x K rows, not a second corpus pass
-    probes = (
-        assigned.filter((F.col("vec_id") < 5) & (F.col("rn") <= F.lit(nprobe)))
-        .select(
-            F.col("vec_id").alias("query_id"), F.col("qv").alias("pqv"),
-            F.col("cell").alias("pcell"),
-        )
-    )
-    scored = (
-        a2.join(
-            F.broadcast(probes),
-            (F.col("cell") == F.col("pcell")) & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _isum(F.zip_with("pqv", "qv", lambda a, b: a * b)).cast("long").alias("qdot"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qdot"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _IVF_TOPK)
-        .select("query_id", "neighbor_id", "qdot")
-    )
-
-
-@register(
-    "ann_ivf_recall",
-    oracle=f"""
-    WITH ivf AS (
-{REGISTRY["ann_ivf_kmeans_topk"].oracle}
-    ),
-    rq AS (SELECT vec_id, {_IVF_QV_SQL} AS qv FROM embeddings),
-    rprobes AS (SELECT vec_id AS query_id, qv AS pqv FROM rq WHERE vec_id < 5),
-    rscored AS (
-      SELECT p.query_id, e.vec_id AS neighbor_id,
-             CAST(list_sum(list_transform(range(1, {_IVF_DIM} + 1),
-                           i -> p.pqv[i] * e.qv[i])) AS BIGINT) AS qdot
-      FROM rprobes p JOIN rq e ON e.vec_id != p.query_id
-    ),
-    rexact AS (
-      SELECT query_id, neighbor_id
-      FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                         ORDER BY qdot DESC, neighbor_id ASC) AS rn
-            FROM rscored) t
-      WHERE rn <= {_IVF_TOPK}
-    )
-    SELECT e.query_id,
-           CAST(COUNT(i.neighbor_id) AS BIGINT) AS n_hits,
-           ROUND(COUNT(i.neighbor_id) * 1.0 / {_IVF_TOPK}, 4) AS recall_at_10
-    FROM rexact e LEFT JOIN ivf i
-      ON i.query_id = e.query_id AND i.neighbor_id = e.neighbor_id
-    GROUP BY e.query_id
-    """,
-    survey_ref="A12,A14",
-    tags=("similarity",),
-)
-def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Recall@k audit of the learned-quantizer IVF (nprobe=1) against the
-    # exhaustive ground truth UNDER THE SAME METRIC the IVF ranks by
-    # (exact integer dot product over the full corpus) — so the number
-    # isolates exactly what nprobe=1 cell restriction loses. A real IVF
-    # ships with this measurement; reference analog: the lingua-vs-cossim
-    # precision/recall audit (reference nlp.py:437-446). Deterministic on
-    # both engines (integer math + total tie-break), so the recall value
-    # itself is oracle-checked, and tests/test_pipeline_ops.py asserts the
-    # floor recorded in COVERAGE.md.
-    return _ivf_recall_impl(spark, sf_dir, nprobe=1)
-
-
-def _ivf_recall_impl(spark: SparkSession, sf_dir: str, nprobe: int = 1) -> DataFrame:
-    ivf = _ivf_topk_impl(spark, sf_dir, nprobe=nprobe).select(
-        "query_id", "neighbor_id", F.lit(1).alias("__hit")
-    )
-    qv = F.transform(
-        F.col("embedding"), lambda x: F.floor(x.cast("double") * _IVF_SCALE).cast("long")
-    )
-    e = _widen(load(spark, sf_dir, "embeddings"), "vec_id").select("vec_id", qv.alias("qv"))
-    probes = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("qv").alias("pqv")
-    )
-
-    def isum(arr):
-        return F.aggregate(arr, F.lit(0).cast("long"), lambda a, x: a + x)
-
-    scored = e.join(F.broadcast(probes), F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        isum(F.zip_with("pqv", "qv", lambda a, b: a * b)).cast("long").alias("qdot"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("qdot"), F.asc("neighbor_id"))
-    exact = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _IVF_TOPK)
-        .select("query_id", "neighbor_id")
-    )
-    return (
-        exact.join(ivf, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count("__hit").cast("long").alias("n_hits"),
-            F.round(F.count("__hit") * 1.0 / _IVF_TOPK, 4).alias("recall_at_10"),
         )
     )
 
@@ -1514,7 +987,6 @@ _SEM_T_NUM, _SEM_T_DEN = 81, 100
     FROM norms n LEFT JOIN dups d USING (vec_id)
     """,
     survey_ref="A12,J6",
-    tags=("dedup", "similarity", "pipeline"),
 )
 def semdedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic dedup (SemDeDup, Abbas et al. 2023): k-means-cluster the
@@ -1529,9 +1001,8 @@ def semdedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE text in the oracle so quantizer semantics cannot drift); the
     pairwise stage joins each cluster only with itself, so cost is
     sum(|cell|^2) — bounded by making K grow with corpus size (SemDeDup
-    runs K ~ n/target_cell_size; K is pinned at _IVF_K=8 here only to
-    share the quantizer twin with the ann_ivf oracle, and the dup
-    decision is the all-integer threshold above). dup_of points at the
+    runs K ~ n/target_cell_size; K is pinned at _IVF_K=8 here, and the
+    dup decision is the all-integer threshold above). dup_of points at the
     MINIMUM qualifying earlier id (deterministic under any partitioning;
     a dup's dup_of may itself be a dup — chain semantics documented,
     exemplars are the kept=true rows)."""
@@ -1590,7 +1061,6 @@ def semdedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE len(t) > 0
     """,
     survey_ref="A10,C10,F6",
-    tags=("text",),
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _widen(load(spark, sf_dir, "documents")).select("doc_id", _tokens_col().alias("t"))
@@ -1621,7 +1091,6 @@ _STOPWORDS = "('the', 'a', 'and', 'of', 'to', 'in')"
     WHERE len(t) > 0
     """,
     survey_ref="A13,F7,F8",
-    tags=("text",),
 )
 def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Quality heuristics a pretraining pipeline gates on: length, stopword
@@ -1674,7 +1143,6 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rn = 1
     """,
     survey_ref="U1,F11,A12",
-    tags=("text",),
 )
 def text_langid_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Character-trigram language ID: per-lang trigram profiles (trained on
@@ -1712,7 +1180,7 @@ def _langid_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the cache holds post-shuffle aggregated rows, orders of magnitude
     # smaller than the raw gram stream.
     gcounts = grams.groupBy("doc_id", "lang", "g").agg(F.count("*").alias("dc")).persist()
-    _PERSISTED.append(gcounts)  # released via release_persisted() (bench legs)
+    _PERSISTED.append(gcounts)  # released via release_persisted()
     profile = gcounts.groupBy(F.col("lang").alias("plang"), "g").agg(F.sum("dc").alias("pc"))
     docg = gcounts.select("doc_id", "g", "dc")
     # the profile is BOUNDED (languages x observed trigram space — ~50k
@@ -1773,7 +1241,6 @@ def _langid_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM top p JOIN tot t ON p.doc_id = t.doc_id
     """,
     survey_ref="U1,F11",
-    tags=("text",),
 )
 def text_langid_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Calibrated confidence for the trigram langid (reference U1/F11
@@ -1819,7 +1286,6 @@ def text_langid_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY fp HAVING COUNT(*) > 1
     """,
     survey_ref="C1,E2",
-    tags=("text", "dedup"),
 )
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Order-insensitive document fingerprint (sorted distinct token set ->
@@ -1927,7 +1393,6 @@ def balanced_sample(d: DataFrame, strat_col: str = "lang", margin: float = 2.0) 
     FROM ranked, q WHERE sample_rank <= quota
     """,
     survey_ref="W7,T5",
-    tags=("pipeline",),
 )
 def sample_stratified_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Language-balanced deterministic sample of the documents table. The
@@ -2004,7 +1469,6 @@ aggregate(
     FROM sig
     """,
     survey_ref="A10,F6,F7",
-    tags=("text",),
 )
 def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NO width pin here, deliberately: this op is map-side only (zero
@@ -2105,7 +1569,6 @@ text || (CASE CAST(doc_id % 4 AS INT)
     FROM counted
     """,
     survey_ref="C6,F2,U3",
-    tags=("text", "pipeline"),
 )
 def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Detect-and-redact PII (emails / phones / IPs) with counts per doc.
@@ -2191,7 +1654,6 @@ _BOILER_MIN_DOCS = 3
     FROM flagged GROUP BY doc_id
     """,
     survey_ref="A3,J6,C7",
-    tags=("dedup", "pipeline"),
 )
 def dedup_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide line-frequency dedup: drop lines appearing in >=3
@@ -2298,7 +1760,6 @@ _CONTAM_N = 6  # gram width; GPT-3 used 13-grams, scaled down to the fixture doc
     FROM train LEFT JOIN hits ON train.doc_id = hits.doc_id
     """,
     survey_ref="J5,J7,A14",
-    tags=("dedup", "pipeline"),
 )
 def bench_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-vs-benchmark n-gram decontamination (the GPT-3 appendix-C
@@ -2411,7 +1872,6 @@ def bench_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM toks GROUP BY lang
     """,
     survey_ref="A5,A9,A16",
-    tags=("text", "pipeline"),
 )
 def text_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language token-length percentiles (exact linear-interpolation
@@ -2434,92 +1894,7 @@ def text_length_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Multimodal (binary-column) operators — rows-only driver check; pixel-exact
-# gates live in tests/test_multimodal.py and the crawl parity suite
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "multimodal_image_features",
-    # binary decode is not SQL-expressible, but its EXPECTED OUTPUT is: the
-    # committed fixture parquet holds the single-process pandas twin's
-    # features (fixtures.expected_image_features_rows — render -> encode ->
-    # decode -> stats with no Spark anywhere; regen-gated byte-identical by
-    # tests/test_multimodal.py), so the driver value-hashes the whole
-    # mapInPandas decode path instead of the old rows-only check.
-    oracle=f"""
-    SELECT image_id, w, h, fmt,
-           ROUND(mean_r, 4) AS mean_r,
-           ROUND(mean_g, 4) AS mean_g,
-           ROUND(mean_b, 4) AS mean_b,
-           ROUND(std_gray, 4) AS std_gray,
-           thumb_digest,
-           ROUND(thumb_norm, 6) AS thumb_norm,
-           phash_ok,
-           ROUND(psnr_db, 2) AS psnr_db
-    FROM read_parquet('{os.path.join(_FIXTURES_DIR, "multimodal_expected.parquet")}')
-    WHERE phash_ok AND psnr_db >= 40.0
-    """,
-    survey_ref="U8,C19,S17",
-    tags=("multimodal",),
-)
-def multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Opaque binary column -> decode -> channel stats + 8x8 thumbnail
-    # embedding, all in Arrow batches (operators/multimodal.py). Input is
-    # the deterministic synthetic image store — ``sf_dir`` is deliberately
-    # unused because the driver tables carry no binary columns. The
-    # driver-facing projection is SCALAR-ONLY: the rows-only canonicalizer
-    # sorts columns through pandas, which cannot hash list cells — so the
-    # thumb vector is exported as an md5 digest plus its L2 norm; the
-    # array form stays available internally for the ann_* operators via
-    # image_features() directly.
-    #
-    # The rows-only driver check has TEETH: every row carries in-UDF
-    # decode invariants (phash recomputed == stored; PSNR vs the
-    # independently re-rendered ground truth >= 40 dB) and the query
-    # FILTERS on them — a broken decode yields fewer than the expected 24
-    # rows in CORRECTNESS_r{N}, not silently-wrong features.
-    from ..operators.multimodal import image_features_validated
-    from ..sources import fixtures as fx
-
-    lex = [t for t, _ in fx.gen_lexicon_rows(42, 16)]
-    pages = fx.gen_pages(spark, 42, 24, lex)
-    feats = image_features_validated(pages, 42).filter(
-        F.col("phash_ok") & (F.col("psnr_db") >= 40.0)
-    )
-    # digest over INTEGER micro-units (floor(x*1e6 + 0.5) = half-up, exact
-    # on these non-negative doubles): integers stringify identically in
-    # the JVM and in the pandas twin, where double-to-string formatting
-    # ("1.0E-6" vs "1e-06") never would
-    thumb_str = F.concat_ws(
-        ",",
-        F.transform(
-            F.col("thumb"),
-            lambda x: F.floor(x.cast("double") * 1_000_000 + F.lit(0.5)).cast("long").cast("string"),
-        ),
-    )
-    thumb_norm = F.sqrt(
-        F.aggregate(
-            F.transform(F.col("thumb"), lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    return feats.select(
-        "image_id", "w", "h", "fmt",
-        F.round("mean_r", 4).alias("mean_r"),
-        F.round("mean_g", 4).alias("mean_g"),
-        F.round("mean_b", 4).alias("mean_b"),
-        F.round("std_gray", 4).alias("std_gray"),
-        F.md5(thumb_str).alias("thumb_digest"),
-        F.round(thumb_norm, 6).alias("thumb_norm"),
-        "phash_ok",
-        F.round("psnr_db", 2).alias("psnr_db"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Event-stream analytics (batch formulation; streaming twin in streaming/)
+# Event-stream analytics (batch formulation)
 # ---------------------------------------------------------------------------
 
 
@@ -2531,7 +1906,6 @@ def multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY 1, 2
     """,
     survey_ref="T1,A1",
-    tags=("events",),
 )
 def events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
@@ -2560,12 +1934,10 @@ def events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sess GROUP BY user_id
     """,
     survey_ref="T1,W2",
-    tags=("events",),
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Gap-based sessionization (30-min inactivity): lag -> flag -> running
-    # sum, the standard batch formulation (streaming twin: session windows
-    # with watermark in streaming/stream_ops.py).
+    # sum, the standard batch formulation.
     e = load(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     gapped = e.withColumn("__prev_ts", F.lag(F.col("ts")).over(w)).withColumn(
@@ -2639,7 +2011,6 @@ def _sample_hash_int_col() -> F.Column:
     WHERE {_SAMPLE_HASH_INT_SQL} < c.cutoff
     """,
     survey_ref="A1,J1,T5",
-    tags=("pipeline", "sampling"),
 )
 def sample_temperature_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-based language rebalancing: keep head-language docs with
@@ -2735,7 +2106,6 @@ _DSIR_TARGET = "fr"  # target domain = one language's docs (the role Wikipedia
     FROM scored CROSS JOIN thr
     """,
     survey_ref="A10,J1,A14",
-    tags=("sampling", "pipeline"),
 )
 def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR (Xie et al. 2023, "Data Selection for Language Models via
@@ -2933,7 +2303,6 @@ _DOCS_PREFIX_SQL = f"""
     FROM base b LEFT JOIN agg a USING (doc_id) LEFT JOIN dupg dg USING (doc_id)
     """,
     survey_ref="A3,J5,W5,C7",
-    tags=("dedup", "pipeline"),
 )
 def dedup_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flag and measure verbatim spans repeated across documents: k-token
@@ -3111,7 +2480,6 @@ _PPL_REF_CUT = 345876451382054092  # 0.3 * 16^15, exact integer on both engines
     FROM ppl p JOIN thr t ON t.lang = p.lang
     """,
     survey_ref="U1,A10,A11,F11",
-    tags=("text", "pipeline"),
 )
 def text_perplexity_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style quality bucketing: per-language char-trigram LM trained
@@ -3224,166 +2592,4 @@ def text_perplexity_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("p6") <= F.col("t2"), F.lit("middle"))
         .otherwise(F.lit("tail"))
         .alias("bucket"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Host-authority PageRank (frontier prioritization)
-# ---------------------------------------------------------------------------
-
-# A crawl frontier schedules better when host budget is informed by link
-# authority (OPIC / PageRank-ordered crawling, Cho et al. 1998; the
-# reference's priority frontier orders by host budget + depth — authority
-# is the standard third signal). Fixed-iteration PageRank with damping
-# 0.85 and explicit dangling-mass redistribution; the host link graph is
-# derived deterministically from doc_id here (in-query fixture convention
-# — at crawl scale the edge list is the extracted-link table).
-_PR_HOSTS = 64
-_PR_DAMP = 0.85
-_PR_ITERS = 4
-
-# both engines derive the same destination host from md5(doc_id || 'e')
-_PR_DST_SQL = (
-    "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR) || 'e'), 1, 15)) AS BIGINT)"
-    f" % {_PR_HOSTS}"
-)
-
-
-def _pagerank_oracle_sql() -> str:
-    h, d, k = _PR_HOSTS, _PR_DAMP, _PR_ITERS
-    ctes = [
-        f"""hosts AS (SELECT unnest(range(0, {h})) AS h),
-    edges AS (
-      SELECT src, dst, COUNT(*) AS w FROM (
-        SELECT doc_id % {h} AS src, {_PR_DST_SQL} AS dst FROM documents
-      ) WHERE src != dst GROUP BY src, dst
-    ),
-    outdeg AS (SELECT src, SUM(w) AS od FROM edges GROUP BY src),
-    ew AS (SELECT e.src, e.dst, e.w * 1.0 / o.od AS frac
-           FROM edges e JOIN outdeg o ON o.src = e.src),
-    r0 AS (SELECT h, 1.0 / {h} AS r FROM hosts)"""
-    ]
-    for i in range(1, k + 1):
-        ctes.append(
-            f"""dang{i} AS (
-      SELECT COALESCE(SUM(r.r), 0.0) AS dang FROM r{i - 1} r
-      LEFT JOIN outdeg o ON o.src = r.h WHERE o.src IS NULL
-    ),
-    c{i} AS (
-      SELECT e.dst AS h, SUM(e.frac * r.r) AS contrib
-      FROM ew e JOIN r{i - 1} r ON r.h = e.src GROUP BY e.dst
-    ),
-    r{i} AS (
-      SELECT hosts.h,
-             {1.0 - d!r} / {h} + {d!r} * (COALESCE(c.contrib, 0.0)
-               + (SELECT dang FROM dang{i}) / {h}) AS r
-      FROM hosts LEFT JOIN c{i} c ON c.h = hosts.h
-    )"""
-        )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT r.h AS host_id,
-           CAST(COALESCE(o.od, 0) AS BIGINT) AS out_edges,
-           ROUND(r.r, 8) AS rank
-    FROM r{k} r LEFT JOIN outdeg o ON o.src = r.h"""
-    )
-
-
-@register(
-    "graph_host_authority",
-    oracle=_pagerank_oracle_sql(),
-    survey_ref="W9,J1,T5",
-    tags=("graph", "pipeline"),
-)
-def graph_host_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-iteration PageRank over the host link graph: the authority
-    score a priority frontier folds into its host-budget ordering.
-
-    Scale shape: the classic Spark PageRank loop — the edge table is
-    normalized ONCE into per-edge contribution fractions and persisted;
-    each iteration is one equi-join ranks-to-edges on src + one partial-
-    aggregable groupBy(dst), with the dangling mass as a 1-row aggregate
-    cross-joined back (a treeAggregate scalar, never a driver collect).
-    On a cluster, ranks and edges are co-partitioned on the host key so
-    the per-iteration join is shuffle-free after the first pass, and long
-    runs checkpoint every ~10 iterations to cut lineage — documented
-    here, unnecessary at K=4. The iteration count is FIXED (not
-    convergence-tested) so the oracle can unroll the identical dataflow.
-    """
-    h, d = _PR_HOSTS, _PR_DAMP
-    docs = load(spark, sf_dir, "documents").select("doc_id")
-    dst = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("e"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-        % h
-    )
-    edges = (
-        docs.select((F.col("doc_id") % h).alias("src"), dst.alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("w"))
-    )
-    outdeg = edges.groupBy("src").agg(F.sum("w").alias("od"))
-    ew = (
-        edges.join(outdeg, "src")
-        .select("src", "dst", (F.col("w") * 1.0 / F.col("od")).alias("frac"))
-        .persist()
-    )
-    _PERSISTED.append(ew)
-    # hosts carry a STATIC has_out flag so the per-iteration dangling mass
-    # is a plain aggregate over ranks — no join in the loop body
-    hosts = spark.range(h).select(F.col("id").alias("h"))
-    hmeta = hosts.join(
-        F.broadcast(outdeg.select(F.col("src").alias("h"), F.lit(True).alias("has_out"))),
-        "h",
-        "left",
-    ).select("h", F.coalesce("has_out", F.lit(False)).alias("has_out"))
-    ranks = hmeta.select("h", "has_out", F.lit(1.0 / h).alias("r"))
-    # rank/degree frames are host-cardinality (bounded, tiny next to the
-    # edge list) — broadcast them so each iteration is ONE map-side join +
-    # one partial-aggregable groupBy over the edges, never a shuffle of
-    # the rank table. At 10^8 hosts the same loop co-partitions ranks
-    # with ew on the host key instead; per-iteration cost here is fixed
-    # scheduling latency (a few tiny broadcast jobs) that amortizes at
-    # real edge volumes.
-    for _ in range(_PR_ITERS):
-        dang = ranks.agg(
-            F.coalesce(F.sum(F.when(~F.col("has_out"), F.col("r"))), F.lit(0.0)).alias(
-                "dang"
-            )
-        )
-        contrib = (
-            ew.join(F.broadcast(ranks), ew["src"] == ranks["h"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("frac") * F.col("r")).alias("contrib"))
-        )
-        ranks = (
-            hmeta.join(F.broadcast(contrib), hmeta["h"] == contrib["dst"], "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "h",
-                "has_out",
-                (
-                    F.lit((1.0 - d) / h)
-                    + d
-                    * (F.coalesce("contrib", F.lit(0.0)) + F.col("dang") / h)
-                ).alias("r"),
-            )
-        )
-        # each iteration reads ranks TWICE (dangling mass + contributions);
-        # without a persist the lineage re-expands through every prior
-        # iteration on both branches — exponential recompute in K
-        ranks = ranks.persist()
-        _PERSISTED.append(ranks)
-    return ranks.join(F.broadcast(outdeg), ranks["h"] == outdeg["src"], "left").select(
-        F.col("h").alias("host_id"),
-        F.coalesce("od", F.lit(0)).cast("long").alias("out_edges"),
-        F.round("r", 8).alias("rank"),
     )

@@ -17,7 +17,7 @@ import os
 import tempfile
 import zipfile
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -86,7 +86,6 @@ class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # ANSI SQL for DuckDB; None -> rows-only check
     survey_ref: str = ""  # operator ids from SURVEY.md §2, e.g. "J1,A6"
-    tags: tuple[str, ...] = field(default_factory=tuple)
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -96,7 +95,6 @@ def register(
     name: str,
     oracle: str | None,
     survey_ref: str = "",
-    tags: tuple[str, ...] = (),
 ) -> Callable[[Callable[[SparkSession, str], DataFrame]], Callable]:
     def deco(fn: Callable[[SparkSession, str], DataFrame]) -> Callable:
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -105,9 +103,7 @@ def register(
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
-        REGISTRY[name] = QuerySpec(
-            name=name, fn=wrapped, oracle=oracle, survey_ref=survey_ref, tags=tags
-        )
+        REGISTRY[name] = QuerySpec(name=name, fn=wrapped, oracle=oracle, survey_ref=survey_ref)
         return fn
 
     return deco

@@ -450,7 +450,6 @@ def e1_e2_union_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag, l_linestatus
     """,
     survey_ref="A6,A7,F1",
-    tags=("flagship",),
 )
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").filter(

@@ -18,7 +18,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..functions.imaging import (
     jpeg_encode,
@@ -138,7 +137,7 @@ def page_row(seed: int, k: int, lex_words: list[str], lossy: str = "real") -> di
     image where libjpeg-turbo costs ~2 ms, so the real codec would make
     the measured region python-codec-bound — unrepresentative of any
     production cluster — while correctness paths (crawl parity,
-    multimodal oracle, bench crawl) all run the real codec."""
+    perfbench) all run the real codec."""
     image_id = f"img-{k:08d}"
     img = expected_pixels(seed, k)
     h, w = img.shape[:2]
@@ -366,76 +365,3 @@ def gen_robots_bodies(spark: SparkSession, seed: int, n_hosts: int = N_HOSTS_DEF
         for hid, r in enumerate(gen_robots_rows(seed, n_hosts))
     ]
     return spark.createDataFrame(rows, "host string, body string")
-
-
-def gen_lexicon(spark: SparkSession, seed: int, n_terms: int = 64) -> DataFrame:
-    return spark.createDataFrame(gen_lexicon_rows(seed, n_terms), "term string, freq long")
-
-
-def gen_english_lexicon(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(gen_english_lexicon_rows(), "term string")
-
-
-def with_seed_priority(df: DataFrame) -> DataFrame:
-    """Seeds enter the frontier with depth 0 / neutral relevance."""
-    return df.withColumn("depth", F.lit(0)).withColumn("relevance", F.lit(0.0))
-
-
-# --- multimodal expected-features twin (oracle fixture) ---------------------------
-
-
-def expected_image_features_rows(seed: int, n: int, n_lex: int = 16) -> pd.DataFrame:
-    """Single-process pandas twin of the ``multimodal_image_features``
-    query: render -> encode -> decode -> features for pages 0..n-1 with NO
-    Spark anywhere — the independent execution path the DuckDB oracle
-    reads (as a committed fixture parquet), value-checking the whole
-    mapInPandas/Arrow plumbing against driver-side math. Shares only the
-    public codec kernels (png/jpeg-standin, phash64, psnr) with the
-    engine, exactly as the crawl parity oracle shares the fixture row
-    functions.
-
-    Float columns are emitted UNROUNDED (the oracle SQL applies the same
-    ROUND(...) the Spark query does); the thumb digest uses integer
-    micro-units (floor(x*1e6 + 0.5)) so string formatting can never
-    diverge between the JVM and Python."""
-    import hashlib
-    import math
-
-    from ..functions.imaging import decode_image, phash64, psnr
-
-    lex = [t for t, _ in gen_lexicon_rows(seed, n_lex)]
-    rows = []
-    for k in range(n):
-        r = page_row(seed, k, lex)
-        img = decode_image(bytes(r["bytes"]), r["fmt"]).astype(np.float64)
-        gray = img @ np.array([0.299, 0.587, 0.114])
-        # nearest-neighbor 8x8 thumbnail, identical to operators.multimodal
-        h, w = gray.shape
-        yi = (np.arange(8) * h // 8).clip(0, h - 1)
-        xi = (np.arange(8) * w // 8).clip(0, w - 1)
-        thumb = (gray[np.ix_(yi, xi)] / 255.0).flatten().astype(np.float32)
-        truth = expected_pixels(seed, k)
-        p = min(float(psnr(img.astype(np.uint8), truth)), 99.0)
-        micro = [int(np.floor(float(v) * 1_000_000 + 0.5)) for v in thumb]
-        acc = 0.0  # same left fold as F.aggregate over the float32 array
-        for v in thumb:
-            acc += float(v) * float(v)
-        rows.append(
-            {
-                "image_id": r["image_id"],
-                "w": int(r["w"]),
-                "h": int(r["h"]),
-                "fmt": r["fmt"],
-                "mean_r": float(img[:, :, 0].mean()),
-                "mean_g": float(img[:, :, 1].mean()),
-                "mean_b": float(img[:, :, 2].mean()),
-                "std_gray": float(gray.std()),
-                "thumb_digest": hashlib.md5(
-                    ",".join(str(m) for m in micro).encode()
-                ).hexdigest(),
-                "thumb_norm": math.sqrt(acc),
-                "phash_ok": phash64(img.astype(np.uint8)) == int(r["phash"]),
-                "psnr_db": p,
-            }
-        )
-    return pd.DataFrame(rows)

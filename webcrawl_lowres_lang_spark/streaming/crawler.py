@@ -45,10 +45,6 @@ from ..sources import fixtures as fx
 from ..sources.querygen import english_filter, gen_queries
 from ..sources.tablestore import append_table, overwrite_table, read_table, table_exists
 
-FRONTIER_SCHEMA = (
-    "url_id long, url string, url_canon string, url_hash long, host string, "
-    "domain string, depth int, relevance double"
-)
 DISCOVERY_SCHEMA = "url_id long, depth int, relevance double"
 
 
