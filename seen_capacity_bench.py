@@ -2,7 +2,7 @@
 """10^8-key URL-seen filter capacity evidence (BASELINE.md §seen-capacity).
 
 Builds a 100M-key partitioned Bloom via the production path
-(``build_bloom_from_df``: Arrow-batched per-partition fold, treeAggregate
+(``build_filter_from_df``: Arrow-batched per-partition fold, treeAggregate
 shard merge), then measures what the 10^10-capacity claims extrapolate
 from: build wall time, filter bytes (total / per shard), broadcast wall
 time, single-core numpy probe throughput + observed false-positive rate,
@@ -28,7 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from webcrawl_lowres_lang_spark.operators.bloom import (  # noqa: E402
     BloomConfig,
-    build_bloom_from_df,
+    build_filter_from_df,
 )
 from webcrawl_lowres_lang_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
@@ -47,7 +47,7 @@ def main() -> None:
 
     print(f"building {n_keys} keys...", file=sys.stderr, flush=True)
     t0 = time.perf_counter()
-    bloom = build_bloom_from_df(keys_df, "url_hash", cfg, depth=3)
+    bloom = build_filter_from_df(keys_df, "url_hash", cfg, depth=3)
     build_secs = time.perf_counter() - t0
     print(f"build done {build_secs:.1f}s", file=sys.stderr, flush=True)
 

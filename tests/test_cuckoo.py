@@ -14,10 +14,12 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from webcrawl_lowres_lang_spark.operators.bloom import BloomConfig
+from webcrawl_lowres_lang_spark.operators.bloom import (
+    build_filter_from_df as build_cuckoo_from_df,
+)
 from webcrawl_lowres_lang_spark.operators.cuckoo import (
     CuckooConfig,
     PartitionedCuckoo,
-    build_cuckoo_from_df,
 )
 from webcrawl_lowres_lang_spark.operators.seen import SeenSet
 
@@ -86,6 +88,14 @@ def test_distributed_build_matches_local(spark):
     # fingerprint collisions, bounded by fpp on each side
     d, l = dist.might_contain(probes), local.might_contain(probes)
     assert (d != l).mean() < 3e-3
+
+
+def test_build_with_empty_partitions(spark):
+    """Partitions with no keys fold to an empty filter and merge away."""
+    keys = np.array([11, -7, 2**40, 5, 123_456_789], dtype=np.int64)
+    df = spark.createDataFrame([(int(k),) for k in keys], ["url_hash"]).repartition(16)
+    for cfg in (CFG, BloomConfig(capacity=1_000)):
+        assert build_cuckoo_from_df(df, "url_hash", cfg).might_contain(keys).all()
 
 
 def test_merge_keeps_all_keys():

@@ -11,10 +11,10 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from webcrawl_lowres_lang_spark.operators.bloom import BloomConfig
+from webcrawl_lowres_lang_spark.operators.bloom import ShardedFilter as PartitionedBloom
 from webcrawl_lowres_lang_spark.operators.bloom import (
-    BloomConfig,
-    PartitionedBloom,
-    build_bloom_from_df,
+    build_filter_from_df as build_bloom_from_df,
 )
 from webcrawl_lowres_lang_spark.operators.seen import SeenSet
 

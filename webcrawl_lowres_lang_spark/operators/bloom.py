@@ -1,6 +1,7 @@
 """Partitioned Bloom filter over 64-bit keys (north rule: "partitioned
 Bloom/cuckoo URL-seen set, 10^10-URL capacity, per-partition filters merged
-via treeAggregate").
+via treeAggregate"), plus the sharded container and distributed build it
+shares with the cuckoo filter (operators/cuckoo.py).
 
 Layout: ``num_shards`` independent bit arrays; a key's shard is
 ``key mod num_shards``. At 10^10 keys / 1% fpp the total filter is ~11 GiB
@@ -44,6 +45,12 @@ class BloomConfig:
     def num_hashes(self) -> int:
         k = (self.total_bits / max(self.capacity, 1)) * math.log(2)
         return max(1, min(16, int(round(k))))
+
+    def new_shard(self) -> "BloomShard":
+        return BloomShard(self.bits_per_shard, self.num_hashes)
+
+    def empty(self) -> "ShardedFilter":
+        return ShardedFilter(self)
 
 
 _MIX = np.uint64(0x9E3779B97F4A7C15)  # golden-ratio odd constant
@@ -116,22 +123,30 @@ class BloomShard:
         self.words |= other.words
         return self
 
+    @property
+    def nbytes(self) -> int:
+        return self.words.nbytes
 
-class PartitionedBloom:
-    """All shards; picklable (numpy arrays) so it broadcasts cleanly."""
 
-    def __init__(self, config: BloomConfig):
+class ShardedFilter:
+    """``num_shards`` independent shards of one filter kind; a key's shard
+    is ``key mod num_shards`` and a shard exists once a key lands in it.
+    Picklable (numpy arrays) so it broadcasts cleanly. The config makes
+    each empty shard (``config.new_shard()``); Bloom and cuckoo share
+    everything else."""
+
+    def __init__(self, config):
         self.config = config
-        self.shards: dict[int, BloomShard] = {}
+        self.shards: dict = {}
 
-    def _shard(self, sid: int) -> BloomShard:
+    def _shard(self, sid: int):
         s = self.shards.get(sid)
         if s is None:
-            s = BloomShard(self.config.bits_per_shard, self.config.num_hashes)
+            s = self.config.new_shard()
             self.shards[sid] = s
         return s
 
-    def add_many(self, keys: np.ndarray) -> "PartitionedBloom":
+    def add_many(self, keys: np.ndarray) -> "ShardedFilter":
         keys = np.asarray(keys, dtype=np.int64)
         sids = shard_of(keys, self.config.num_shards)
         for sid in np.unique(sids):
@@ -151,7 +166,7 @@ class PartitionedBloom:
                 out[mask] = shard.might_contain(keys[mask])
         return out
 
-    def merge(self, other: "PartitionedBloom") -> "PartitionedBloom":
+    def merge(self, other: "ShardedFilter") -> "ShardedFilter":
         for sid, shard in other.shards.items():
             if sid in self.shards:
                 self.shards[sid].merge(shard)
@@ -160,13 +175,15 @@ class PartitionedBloom:
         return self
 
     def memory_bytes(self) -> int:
-        return sum(s.words.nbytes for s in self.shards.values())
+        return sum(s.nbytes for s in self.shards.values())
 
 
-def build_bloom_from_df(df, key_col: str, config: BloomConfig, depth: int = 2) -> PartitionedBloom:
-    """Distributed build: each partition folds its keys into a local
-    PartitionedBloom (only the shards it touches), merged via treeAggregate
-    with bitwise OR — commutative/associative, so partitioning-invariant.
+def build_filter_from_df(df, key_col: str, config, depth: int = 2) -> ShardedFilter:
+    """Distributed build of ``config.empty()``'s filter kind: each partition
+    folds its keys into a local filter (only the shards it touches), and
+    the partial filters are merged via treeAggregate — Bloom shards OR,
+    cuckoo shards re-place fingerprints; both are commutative/associative,
+    so the answers are partitioning-invariant.
 
     Ingestion is Arrow-batched (``mapInArrow`` -> numpy ``add_many``), not
     per-row Python: at 10^8 keys the old Row-pickling iterator spent more
@@ -177,19 +194,17 @@ def build_bloom_from_df(df, key_col: str, config: BloomConfig, depth: int = 2) -
 
     import pyarrow as pa
 
-    conf = config
-
     def fold(batches):
-        acc = PartitionedBloom(conf)
+        acc = config.empty()
         for b in batches:
             acc.add_many(b.column(0).to_numpy(zero_copy_only=False).astype(np.int64))
-        yield pa.RecordBatch.from_arrays([pa.array([pickle.dumps(acc)])], names=["blob"])
+        yield pa.RecordBatch.from_arrays([pa.array([pickle.dumps(acc)], pa.binary())], names=["blob"])
 
     blobs = df.select(key_col).mapInArrow(fold, "blob binary").rdd.map(
         lambda r: pickle.loads(r[0])
     )
 
-    def comb_op(a: PartitionedBloom, b: PartitionedBloom) -> PartitionedBloom:
+    def comb_op(a: ShardedFilter, b: ShardedFilter) -> ShardedFilter:
         return a.merge(b)
 
-    return blobs.treeAggregate(PartitionedBloom(conf), comb_op, comb_op, depth=depth)
+    return blobs.treeAggregate(config.empty(), comb_op, comb_op, depth=depth)

@@ -7,11 +7,12 @@ retract a withdrawn host) force a full rebuild; a cuckoo filter removes
 one fingerprint copy in O(1). Space is comparable at practical fpp
 (16-bit fingerprints, 4-slot buckets, ~95% load target).
 
-Same deployment layout as operators/bloom.py: ``num_shards`` independent
-tables, a key's shard is ``key mod num_shards``; shards build
-executor-side and merge via treeAggregate (merge = re-place the other
-table's fingerprints — placement only needs (bucket, fp) because the
-partner bucket is ``i xor H(fp)``, the partial-key cuckoo property).
+Same container and build as operators/bloom.py (``ShardedFilter``,
+``build_filter_from_df``): ``num_shards`` independent tables, a key's
+shard is ``key mod num_shards``; shards build executor-side and merge
+via treeAggregate (merge = re-place the other table's fingerprints —
+placement only needs (bucket, fp) because the partner bucket is
+``i xor H(fp)``, the partial-key cuckoo property).
 Lookups are fully vectorized numpy over Arrow batches; inserts/deletes
 walk a per-key eviction loop (bounded kicks) executor-side.
 
@@ -31,7 +32,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from .bloom import _splitmix, shard_of
+from .bloom import ShardedFilter, _splitmix, shard_of
 
 _FP_INC = np.uint64(0xA24BAED4963EE407)  # fingerprint stream increment
 _IDX_INC = np.uint64(0x9FB21C651E98DF25)  # bucket-index stream increment
@@ -58,6 +59,12 @@ class CuckooConfig:
         per_shard = max(1, self.capacity // self.num_shards)
         return _next_pow2(max(2, int(per_shard / (SLOTS * self.load_target)) + 1))
 
+    def new_shard(self) -> "CuckooShard":
+        return CuckooShard(self.buckets_per_shard, self.max_kicks)
+
+    def empty(self) -> "PartitionedCuckoo":
+        return PartitionedCuckoo(self)
+
 
 def _fingerprints(keys: np.ndarray) -> np.ndarray:
     """16-bit nonzero fingerprint (0 marks an empty slot)."""
@@ -78,15 +85,14 @@ class CuckooShard:
     multiplicity 2, or one ``delete_many`` would silently remove
     membership for both — a pre-filter false negative under deletion."""
 
-    __slots__ = ("table", "mask", "overflow")
+    __slots__ = ("table", "mask", "overflow", "max_kicks")
 
-    def __init__(self, n_buckets: int, table: np.ndarray | None = None):
+    def __init__(self, n_buckets: int, max_kicks: int):
         from collections import Counter
 
-        self.table = (
-            table if table is not None else np.zeros((n_buckets, SLOTS), dtype=np.uint16)
-        )
+        self.table = np.zeros((n_buckets, SLOTS), dtype=np.uint16)
         self.mask = np.uint64(n_buckets - 1)
+        self.max_kicks = max_kicks
         self.overflow: "Counter[tuple[int, int]]" = Counter()  # (i1, fp) -> copies
 
     # -- index math ---------------------------------------------------------
@@ -99,7 +105,7 @@ class CuckooShard:
 
     # -- mutation -----------------------------------------------------------
 
-    def _place(self, i1: int, fp: int, max_kicks: int, rng_state: int) -> None:
+    def _place(self, i1: int, fp: int, rng_state: int) -> None:
         """Insert (i1, fp), evicting residents if both buckets are full."""
         i2 = int(self._alt(np.array([i1]), np.array([fp], dtype=np.uint16))[0])
         for i in (i1, i2):
@@ -111,7 +117,7 @@ class CuckooShard:
         # eviction walk: kick a pseudo-random resident to its partner bucket
         i, cur = i2, fp
         state = np.uint64(rng_state or 1)
-        for _ in range(max_kicks):
+        for _ in range(self.max_kicks):
             state = _splitmix(np.array([state], dtype=np.uint64), _FP_INC)[0]
             slot = int(state % np.uint64(SLOTS))
             cur, self.table[i, slot] = int(self.table[i, slot]), cur
@@ -161,7 +167,7 @@ class CuckooShard:
         leftovers = sorted(set(range(len(fps))) - placed_all)
         return np.array(leftovers, dtype=np.int64)
 
-    def add_many(self, keys: np.ndarray, max_kicks: int = 500) -> None:
+    def add_many(self, keys: np.ndarray) -> None:
         """MULTISET insert: every key stores its own fingerprint copy.
 
         Distinct keys that collide on (bucket-pair, fp) are
@@ -188,10 +194,10 @@ class CuckooShard:
         rest = self._bulk_place(i1s[bulk], fps[bulk])
         for j in rest.tolist():
             i1, fp = int(i1s[bulk[j]]), int(fps[bulk[j]])
-            self._place(i1, fp, max_kicks, (i1 * 31 + fp) & 0xFFFFFFFF)
+            self._place(i1, fp, (i1 * 31 + fp) & 0xFFFFFFFF)
         for j in np.nonzero(~mask)[0].tolist():
             i1, fp = int(i1s[j]), int(fps[j])
-            self._place(i1, fp, max_kicks, (i1 * 31 + fp) & 0xFFFFFFFF)
+            self._place(i1, fp, (i1 * 31 + fp) & 0xFFFFFFFF)
 
     def delete_many(self, keys: np.ndarray) -> int:
         """Remove ONE fingerprint copy per key present; returns removals.
@@ -261,34 +267,19 @@ class CuckooShard:
             # partitions re-places twice; delete_many removes one copy per
             # call, and might_contain is unaffected — exactness is owned
             # by the backing table, as with the Bloom
-            self._place(i, fp, 500, (i * 31 + fp) & 0xFFFFFFFF)
+            self._place(i, fp, (i * 31 + fp) & 0xFFFFFFFF)
         # Counter.update ADDS counts — a plain set-union would collapse
         # multiplicity and break delete-by-copy
         self.overflow.update(other.overflow)
         return self
 
+    @property
+    def nbytes(self) -> int:
+        return self.table.nbytes
 
-class PartitionedCuckoo:
-    """All shards; picklable, broadcast-friendly — interface-compatible
-    with PartitionedBloom (add_many / might_contain / merge)."""
 
-    def __init__(self, config: CuckooConfig):
-        self.config = config
-        self.shards: dict[int, CuckooShard] = {}
-
-    def _shard(self, sid: int) -> CuckooShard:
-        s = self.shards.get(sid)
-        if s is None:
-            s = CuckooShard(self.config.buckets_per_shard)
-            self.shards[sid] = s
-        return s
-
-    def add_many(self, keys: np.ndarray) -> "PartitionedCuckoo":
-        keys = np.asarray(keys, dtype=np.int64)
-        sids = shard_of(keys, self.config.num_shards)
-        for sid in np.unique(sids):
-            self._shard(int(sid)).add_many(keys[sids == sid], self.config.max_kicks)
-        return self
+class PartitionedCuckoo(ShardedFilter):
+    """Cuckoo shards: the Bloom's container plus per-key deletion."""
 
     def delete_many(self, keys: np.ndarray) -> int:
         keys = np.asarray(keys, dtype=np.int64)
@@ -299,43 +290,3 @@ class PartitionedCuckoo:
             if shard is not None:
                 removed += shard.delete_many(keys[sids == sid])
         return removed
-
-    def might_contain(self, keys: np.ndarray) -> np.ndarray:
-        keys = np.asarray(keys, dtype=np.int64)
-        if len(keys) == 0:
-            return np.zeros(0, dtype=bool)
-        sids = shard_of(keys, self.config.num_shards)
-        out = np.zeros(len(keys), dtype=bool)
-        for sid in np.unique(sids):
-            mask = sids == sid
-            shard = self.shards.get(int(sid))
-            if shard is not None:
-                out[mask] = shard.might_contain(keys[mask])
-        return out
-
-    def merge(self, other: "PartitionedCuckoo") -> "PartitionedCuckoo":
-        for sid, shard in other.shards.items():
-            if sid in self.shards:
-                self.shards[sid].merge(shard)
-            else:
-                self.shards[sid] = shard
-        return self
-
-    def memory_bytes(self) -> int:
-        return sum(s.table.nbytes for s in self.shards.values())
-
-
-def build_cuckoo_from_df(df, key_col: str, config: CuckooConfig, depth: int = 2) -> PartitionedCuckoo:
-    """Distributed build, exactly like build_bloom_from_df: per-partition
-    local filters (only the shards touched) merged via treeAggregate."""
-
-    def seq_op(acc: PartitionedCuckoo, batch) -> PartitionedCuckoo:
-        return acc.add_many(batch)
-
-    def comb_op(a: PartitionedCuckoo, b: PartitionedCuckoo) -> PartitionedCuckoo:
-        return a.merge(b)
-
-    batches = df.select(key_col).rdd.mapPartitions(
-        lambda it: [np.fromiter((r[0] for r in it), dtype=np.int64)]
-    )
-    return batches.treeAggregate(PartitionedCuckoo(config), seq_op, comb_op, depth=depth)

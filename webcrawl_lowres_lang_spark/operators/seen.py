@@ -33,8 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
 from ..sources.tablestore import append_table, read_table, rewrite_table, table_exists
-from .bloom import BloomConfig, PartitionedBloom, build_bloom_from_df
-from .cuckoo import CuckooConfig, PartitionedCuckoo, build_cuckoo_from_df
+from .bloom import BloomConfig, ShardedFilter, build_filter_from_df, shard_of
+from .cuckoo import CuckooConfig, PartitionedCuckoo
 
 SEEN_SCHEMA = StructType([
     StructField("url_hash", LongType(), False),
@@ -69,12 +69,13 @@ class SeenSet:
         self.spark = spark
         self.path = path
         self.n_buckets = n_buckets
-        self.filter_kind = filter_kind
-        self.bloom_config = bloom_config or BloomConfig(capacity=1_000_000, fpp=0.01)
-        self.cuckoo_config = cuckoo_config or CuckooConfig(
-            capacity=self.bloom_config.capacity, num_shards=self.bloom_config.num_shards
-        )
-        self._bloom: PartitionedBloom | PartitionedCuckoo | None = None
+        bloom_config = bloom_config or BloomConfig(capacity=1_000_000, fpp=0.01)
+        self.filter_config = bloom_config
+        if filter_kind == "cuckoo":
+            self.filter_config = cuckoo_config or CuckooConfig(
+                capacity=bloom_config.capacity, num_shards=bloom_config.num_shards
+            )
+        self._bloom: ShardedFilter | None = None
         self._bloom_bc = None
         # optional phase callback (CrawlEngine wires its _label here) so
         # driver-side time inside add() is attributable in profiles
@@ -83,16 +84,6 @@ class SeenSet:
     def _phase(self, name: str) -> None:
         if self._phase_cb is not None:
             self._phase_cb(name)
-
-    def _build_filter_from_df(self, df: DataFrame, depth: int = 2):
-        if self.filter_kind == "cuckoo":
-            return build_cuckoo_from_df(df, "url_hash", self.cuckoo_config, depth=depth)
-        return build_bloom_from_df(df, "url_hash", self.bloom_config, depth=depth)
-
-    def _empty_filter(self):
-        if self.filter_kind == "cuckoo":
-            return PartitionedCuckoo(self.cuckoo_config)
-        return PartitionedBloom(self.bloom_config)
 
     # -- storage ------------------------------------------------------------
 
@@ -140,7 +131,7 @@ class SeenSet:
 
         @F.pandas_udf(BooleanType())
         def might_contain(keys: pd.Series) -> pd.Series:
-            flt = bc.value  # PartitionedBloom or PartitionedCuckoo
+            flt = bc.value  # the live ShardedFilter
             return pd.Series(flt.might_contain(keys.to_numpy()))
 
         return might_contain(F.col(key_col))
@@ -208,7 +199,9 @@ class SeenSet:
         if self._bloom is not None and n:
             self._phase("seen:delta-build")
             build_parts = max(1, min(self.n_buckets, 1 + n // 250_000))
-            delta = self._build_filter_from_df(out.coalesce(build_parts))
+            delta = build_filter_from_df(
+                out.coalesce(build_parts), "url_hash", self.filter_config
+            )
             self._phase("seen:merge")
             self._bloom.merge(delta)
             self._rebroadcast()
@@ -257,7 +250,7 @@ class SeenSet:
         remaining = self.load().join(present, ["bucket", "url_hash"], "left_anti")
         rewrite_table(remaining, self.path, partition_by=("bucket",))
         if self._bloom is not None:
-            if self.filter_kind == "cuckoo":
+            if isinstance(self._bloom, PartitionedCuckoo):
                 import numpy as np
 
                 if n <= distributed_threshold:
@@ -283,8 +276,6 @@ class SeenSet:
         import pickle
 
         import numpy as np
-
-        from .cuckoo import shard_of
 
         bc = self._bloom_bc
         num_shards = self._bloom.config.num_shards
@@ -324,13 +315,15 @@ class SeenSet:
 
     def build_bloom(self, depth: int = 2):
         """(Re)build the partitioned filter (Bloom or cuckoo, per
-        ``filter_kind``) from the exact table via treeAggregate-merged
+        ``filter_config``) from the exact table via treeAggregate-merged
         per-partition shards."""
-        self._bloom = self._build_filter_from_df(self.load(), depth=depth)
+        self._bloom = build_filter_from_df(
+            self.load(), "url_hash", self.filter_config, depth=depth
+        )
         self._rebroadcast()
         return self._bloom
 
     def enable_empty_bloom(self) -> None:
         """Start a fresh crawl with an empty live filter (everything unseen)."""
-        self._bloom = self._empty_filter()
+        self._bloom = self.filter_config.empty()
         self._rebroadcast()
