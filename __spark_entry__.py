@@ -2,9 +2,7 @@
 
 ``queries()``/``oracle_sql()`` are thin views over the engine's plan
 registry (webcrawl_lowres_lang_spark/plans); every operator claimed done in
-SURVEY.md §2 has a registry entry with a DuckDB oracle where the semantics
-are ANSI-SQL-expressible (non-SQL ops register with oracle=None and get the
-driver's rows-only check).
+SURVEY.md §2 has a registry entry with a DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -35,5 +33,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL twin for each SQL-expressible query."""
-    return {name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None}
+    """DuckDB-runnable ANSI SQL twin for each query."""
+    return {name: spec.oracle for name, spec in REGISTRY.items()}

@@ -84,7 +84,7 @@ def ensure_executors_can_import(spark: SparkSession) -> None:
 class QuerySpec:
     name: str
     fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None  # ANSI SQL for DuckDB; None -> rows-only check
+    oracle: str  # ANSI SQL for DuckDB
     survey_ref: str = ""  # operator ids from SURVEY.md §2, e.g. "J1,A6"
 
 
@@ -93,7 +93,7 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 def register(
     name: str,
-    oracle: str | None,
+    oracle: str,
     survey_ref: str = "",
 ) -> Callable[[Callable[[SparkSession, str], DataFrame]], Callable]:
     def deco(fn: Callable[[SparkSession, str], DataFrame]) -> Callable:

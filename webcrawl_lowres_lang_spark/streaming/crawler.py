@@ -27,6 +27,8 @@ from __future__ import annotations
 
 import json
 import os
+import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -38,7 +40,12 @@ from ..operators.bloom import BloomConfig
 from ..operators.fetch import fetch_and_validate, sniff_reject
 from ..operators.neardup import suppress_near_dups
 from ..operators.ordering import with_global_sequence
-from ..operators.politeness import admit_per_domain, robots_filter, with_priority
+from ..operators.politeness import (
+    admit_per_domain,
+    parse_robots_bodies,
+    robots_filter,
+    with_priority,
+)
 from ..operators.scoring import LexiconVector, relevance_udf, threshold_classify
 from ..operators.seen import SeenSet
 from ..sources import fixtures as fx
@@ -111,8 +118,6 @@ class CrawlEngine:
         # the politeness cache is PARSED from raw robots.txt bodies (S21/
         # U9 production path — reference lrl-crawler.py:173-182); the
         # parser's round-trip vs the parsed fixture is its own test gate
-        from ..operators.politeness import parse_robots_bodies
-
         self.robots = parse_robots_bodies(
             fx.gen_robots_bodies(spark, c.seed, c.n_hosts)
         ).cache()
@@ -131,6 +136,7 @@ class CrawlEngine:
             filter_kind=c.seen_filter,
         )
         self.seen._phase_cb = self._label  # driver-side profile attribution
+        self.phase_wall: list[tuple[str, float]] = []
         self.round = 0
         self.metrics: list[dict] = []
         self._seen_total = 0  # running counter — avoids a store scan per round
@@ -146,11 +152,7 @@ class CrawlEngine:
         ``phase_wall`` records the label-switch timestamps so driver-side
         time BETWEEN jobs is attributable too (REST job spans only cover
         submitted jobs)."""
-        import time as _time
-
-        if not hasattr(self, "phase_wall"):
-            self.phase_wall: list[tuple[str, float]] = []
-        self.phase_wall.append((phase, _time.monotonic()))
+        self.phase_wall.append((phase, time.monotonic()))
         self.spark.sparkContext.setJobDescription(f"crawl:{phase}")
 
     # -- discovery plumbing ---------------------------------------------------
@@ -395,8 +397,6 @@ class CrawlEngine:
         # writer labels its own jobs.
         # plain subdirs (not round= partition dirs): the round column is
         # already stored in the files; a partition dir would duplicate it
-        from concurrent.futures import ThreadPoolExecutor
-
         def _write_ledger() -> None:
             self._label(f"r{r}:ckpt-ledger")
             overwrite_table(led_obs, os.path.join(self.dir, f"ledger/r{r}"))
