@@ -5,9 +5,12 @@ Builds a 100M-key partitioned Bloom via the production path
 (``build_filter_from_df``: Arrow-batched per-partition fold, treeAggregate
 shard merge), then measures what the 10^10-capacity claims extrapolate
 from: build wall time, filter bytes (total / per shard), broadcast wall
-time, single-core numpy probe throughput + observed false-positive rate,
-and end-to-end distributed probe throughput through the same
-pandas-UDF-over-broadcast path ``SeenSet.filter_unseen`` uses.
+time, the write and load time and file size of the filter snapshot a
+crawl commits every round (``save_filter`` / ``load_filter``, what
+``SeenSet.save_snapshot`` and ``restore`` run), single-core numpy probe
+throughput + observed false-positive rate, and end-to-end distributed
+probe throughput through the same pandas-UDF-over-broadcast path
+``SeenSet.filter_unseen`` uses.
 
 Prints ONE JSON line. Run: ``python seen_capacity_bench.py`` (env:
 SEEN_BENCH_KEYS to override the key count).
@@ -17,7 +20,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 import numpy as np
@@ -29,6 +34,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from webcrawl_lowres_lang_spark.operators.bloom import (  # noqa: E402
     BloomConfig,
     build_filter_from_df,
+    load_filter,
+    save_filter,
 )
 from webcrawl_lowres_lang_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
@@ -57,6 +64,21 @@ def main() -> None:
     t0 = time.perf_counter()
     bc = spark.sparkContext.broadcast(bloom)
     broadcast_secs = time.perf_counter() - t0
+
+    snap_dir = tempfile.mkdtemp(prefix="seen_snapshot_")
+    snap = os.path.join(snap_dir, "filter.npz")
+    t0 = time.perf_counter()
+    save_filter(bloom, snap, version=[])
+    snapshot_write_s = time.perf_counter() - t0
+    snapshot_bytes = os.path.getsize(snap)
+    t0 = time.perf_counter()
+    loaded = load_filter(snap, cfg, version=[])
+    snapshot_load_s = time.perf_counter() - t0
+    shutil.rmtree(snap_dir)
+    assert all(
+        (loaded.shards[sid].words == shard.words).all() for sid, shard in bloom.shards.items()
+    ), "snapshot round trip changed the filter"
+    del loaded
 
     # single-core numpy probe: 5M present + 5M absent
     n_probe = min(5_000_000, n_keys)
@@ -102,6 +124,9 @@ def main() -> None:
                 "shard_mib": round(shard_bytes / 2**20, 2),
                 "build_secs": round(build_secs, 2),
                 "broadcast_secs": round(broadcast_secs, 2),
+                "snapshot_write_s": round(snapshot_write_s, 3),
+                "snapshot_load_s": round(snapshot_load_s, 3),
+                "snapshot_bytes": snapshot_bytes,
                 "numpy_probe_mkeys_per_sec": round(2 * n_probe / probe_secs / 1e6, 1),
                 "observed_fpp": round(observed_fpp, 5),
                 "distributed_probe_mkeys_per_sec": round(2 * n_probe / dist_secs / 1e6, 1),

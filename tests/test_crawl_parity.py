@@ -5,11 +5,16 @@ match, per-row pixel/caption invariants, resume-from-checkpoint equivalence.
 
 from __future__ import annotations
 
+import json
+import os
+
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from webcrawl_lowres_lang_spark.functions.imaging import hamming64
 from webcrawl_lowres_lang_spark.operators.neardup import suppress_near_dups
+from webcrawl_lowres_lang_spark.operators.seen import SeenSet
 from webcrawl_lowres_lang_spark.sources import fixtures as fx
 from webcrawl_lowres_lang_spark.streaming.crawler import (
     CrawlConfig,
@@ -162,22 +167,58 @@ def test_rate_limit_blocks_domain(crawl):
             assert f.round <= first_429[f.domain], (f.domain, f.round)
 
 
-def test_resume_equivalence(spark, tmp_path):
+def _no_rebuild(*_a, **_k):
+    raise AssertionError("resume rebuilt the seen filter instead of loading its snapshot")
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_resume_equivalence(spark, tmp_path, monkeypatch, kind):
     """2 rounds + resume + 1 round == 3 straight rounds (north rule:
-    resumable from snapshot checkpoints)."""
-    cfg2 = CrawlConfig(**{**CFG.__dict__, "rounds": 1, "validate_pixels": False})
+    resumable from snapshot checkpoints). The resume loads the committed
+    filter snapshot: rebuilding the filter from ``url_seen`` fails the
+    test, and the next round's metrics record the restore."""
+    cfg2 = CrawlConfig(**{**CFG.__dict__, "rounds": 1, "validate_pixels": False,
+                          "seen_filter": kind})
     d = str(tmp_path / "ck_resume")
     eng = CrawlEngine(spark, cfg2, d)
     eng.run()
+    monkeypatch.setattr(SeenSet, "build_bloom", _no_rebuild)
     res = CrawlEngine.resume(spark, d)
+    assert res.filter_restore == "snapshot"
     res.cfg.rounds = 1
     res.run(frontier=res.resumed_frontier())
     resumed_order = fetch_order(res.ledger_df())
+    with open(os.path.join(d, f"metrics_round{res.round - 1}.json")) as f:
+        assert json.load(f)["filter_restore"] == "snapshot"
+    # the marker names the new snapshot; the older one is gone
+    assert os.listdir(os.path.join(d, "seen_filter")) == [f"r{res.round - 1}.npz"]
 
-    cfg3 = CrawlConfig(**{**CFG.__dict__, "rounds": 2, "validate_pixels": False})
+    cfg3 = CrawlConfig(**{**cfg2.__dict__, "rounds": 2})
     straight = CrawlEngine(spark, cfg3, str(tmp_path / "ck_straight"))
     straight.run()
     assert resumed_order == fetch_order(straight.ledger_df())
+
+
+def test_resume_after_crash_before_marker_rebuilds(spark, tmp_path):
+    """A crash after round r+1's ``seen.add`` and before its marker leaves
+    ``url_seen`` ahead of round r's filter snapshot. Resume must not load
+    that stale snapshot (its missing keys would be pre-filter false
+    negatives): it rebuilds, and every ``url_seen`` key is filter-positive.
+    Oracle parity of the resumed crawl is not asserted here: rolling back
+    the uncommitted append is the crash-consistent commit's job."""
+    cfg = CrawlConfig(**{**CFG.__dict__, "rounds": 1, "validate_pixels": False})
+    d = str(tmp_path / "ck_crash")
+    eng = CrawlEngine(spark, cfg, d)
+    eng.run()
+    eng.run_round(eng.resumed_frontier())  # appends to url_seen; no _checkpoint
+    res = CrawlEngine.resume(spark, d)
+    assert res.round == 1
+    assert res.filter_restore == "rebuild: version differs"
+    keys = np.array(
+        [r["url_hash"] for r in res.seen.load().select("url_hash").collect()], dtype=np.int64
+    )
+    assert len(keys) > res._seen_total  # the uncommitted append is in the table
+    assert res.seen._bloom.might_contain(keys).all()
 
 
 def _in_memory_relations(spark, df) -> list[int]:
@@ -335,6 +376,9 @@ def test_ttl_expire_bloom_requires_rebuild(spark, tmp_path):
         rows.select("url_id", "depth", F.lit(0.0).alias("relevance"))
     ))
     assert {r["url_hash"] for r in fresh.select("url_hash").collect()} == hashes
+    # the expiry wrote the committed filter snapshot again for the
+    # rewritten table, so a resume still loads it
+    assert CrawlEngine.resume(spark, str(tmp_path / "ck")).filter_restore == "snapshot"
 
 
 def test_smoke_ledger_fixture_in_sync():

@@ -39,6 +39,9 @@ def test_cli_run_and_resume(spark, tmp_path, capsys):
     lines2 = [json.loads(x) for x in capsys.readouterr().out.strip().splitlines()]
     s2 = lines2[-1]["summary"]
     assert s2["rounds"] == 2
+    # the committed seen filter was loaded, not rebuilt from url_seen
+    assert s2["filter_restore"] == "snapshot"
+    assert [x["filter_restore"] for x in lines2 if "round" in x] == ["snapshot"]
     assert s2["urls_fetched"] >= summary["urls_fetched"]
     assert s2["urls_seen"] >= summary["urls_seen"]
 

@@ -187,3 +187,73 @@ def test_expire_large_batch_distributed_no_driver_keys(spark, tmp_path, monkeypa
     assert s._bloom.might_contain(kept).all(), "false negative on kept keys"
     readmit = s.filter_unseen(expired)
     assert readmit.count() == n_exp
+
+
+def _snapshot_seen(spark, tmp_path, kind):
+    """A seen set of ``kind`` holding 2,000 keys; the cuckoo one is sized
+    for 64 keys, so its shards saturate and the overflow multisets fill."""
+    from webcrawl_lowres_lang_spark.operators.cuckoo import CuckooConfig
+
+    s = SeenSet(
+        spark, str(tmp_path / f"seen_{kind}"), n_buckets=8, bloom_config=CFG,
+        filter_kind=kind,
+        cuckoo_config=CuckooConfig(capacity=64, num_shards=4, max_kicks=8),
+    )
+    s.enable_empty_bloom()
+    s.add(_hash_df(spark, range(0, 4000, 2)), assume_new=True)
+    return s
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_filter_snapshot_round_trip(spark, tmp_path, kind):
+    """save_snapshot -> restore gives back the live filter: same answers on
+    every table key and on 10k random keys, same cuckoo overflow."""
+    s = _snapshot_seen(spark, tmp_path, kind)
+    if kind == "cuckoo":
+        assert any(shard.overflow for shard in s._bloom.shards.values())
+    path = str(tmp_path / "snap.npz")
+    s.save_snapshot(path)
+
+    s2 = SeenSet(spark, s.path, n_buckets=8, bloom_config=CFG,
+                 filter_kind=kind, cuckoo_config=s.filter_config)
+    assert s2.restore(path) == "snapshot"
+    table_keys = np.array(sorted(r["url_hash"] for r in s.load().collect()), dtype=np.int64)
+    rand = np.random.default_rng(11).integers(-(2**63), 2**63 - 1, size=10_000, dtype=np.int64)
+    for keys in (table_keys, rand):
+        assert (s2._bloom.might_contain(keys) == s._bloom.might_contain(keys)).all()
+    assert s2._bloom.might_contain(table_keys).all()
+    if kind == "cuckoo":
+        for sid, shard in s._bloom.shards.items():
+            assert s2._bloom.shards[sid].overflow == shard.overflow
+            assert (s2._bloom.shards[sid].table == shard.table).all()
+    # the restored filter is the one filter_unseen probes
+    fresh = s2.filter_unseen(_hash_df(spark, range(3990, 4010)))
+    unseen = sorted(set(range(3990, 4010)) - set(range(0, 4000, 2)))
+    assert sorted(r["url_hash"] for r in fresh.collect()) == unseen
+
+
+def test_stale_or_foreign_snapshot_falls_back_to_rebuild(spark, tmp_path, monkeypatch):
+    """A snapshot is restored only for the table version and filter config
+    it was written under; otherwise restore rebuilds and says why."""
+    s = _snapshot_seen(spark, tmp_path, "bloom")
+    path = str(tmp_path / "snap.npz")
+    s.save_snapshot(path)
+    rebuilds = []
+    build_bloom = SeenSet.build_bloom
+    monkeypatch.setattr(
+        SeenSet, "build_bloom", lambda self: rebuilds.append(1) or build_bloom(self)
+    )
+
+    # another geometry: the same table under a larger filter
+    other = SeenSet(spark, s.path, n_buckets=8,
+                    bloom_config=BloomConfig(capacity=20_000, fpp=0.01, num_shards=8))
+    assert other.restore(path) == "rebuild: config differs"
+    # the table moved on after the snapshot (an append never committed)
+    s.add(_hash_df(spark, [1, 3, 5]), assume_new=True)
+    again = SeenSet(spark, s.path, n_buckets=8, bloom_config=CFG)
+    assert again.restore(path) == "rebuild: version differs"
+    assert again.restore(str(tmp_path / "absent.npz")) == "rebuild: snapshot file missing"
+    assert again.restore(None) == "rebuild: no snapshot"
+    assert len(rebuilds) == 4
+    keys = np.array([r["url_hash"] for r in s.load().collect()], dtype=np.int64)
+    assert again._bloom.might_contain(keys).all()

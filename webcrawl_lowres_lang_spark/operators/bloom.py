@@ -18,8 +18,10 @@ false-positive bound with only one upstream hash.
 
 from __future__ import annotations
 
+import json
 import math
-from dataclasses import dataclass
+import os
+from dataclasses import asdict, dataclass
 
 import numpy as np
 
@@ -123,6 +125,12 @@ class BloomShard:
         self.words |= other.words
         return self
 
+    def arrays(self) -> dict[str, np.ndarray]:
+        return {"words": self.words}
+
+    def load_arrays(self, arrays: dict[str, np.ndarray]) -> None:
+        self.words = same_geometry(self.words, arrays["words"])
+
     @property
     def nbytes(self) -> int:
         return self.words.nbytes
@@ -176,6 +184,57 @@ class ShardedFilter:
 
     def memory_bytes(self) -> int:
         return sum(s.nbytes for s in self.shards.values())
+
+
+def same_geometry(like: np.ndarray, arr: np.ndarray) -> np.ndarray:
+    """``arr`` if it has the shape and dtype of ``like``, else ValueError."""
+    if arr.shape != like.shape or arr.dtype != like.dtype:
+        raise ValueError(
+            f"shard geometry differs: {arr.dtype}{list(arr.shape)}"
+            f" vs {like.dtype}{list(like.shape)}"
+        )
+    return arr
+
+
+def save_filter(flt: ShardedFilter, path: str, version) -> None:
+    """Snapshot ``flt`` to ``path``: every shard's numpy arrays plus a JSON
+    header holding the filter's config and ``version`` (JSON; the version
+    of the key table the filter covers), written to a temp file and
+    renamed into place, so a reader finds the previous file or the whole
+    new one. The config fixes each shard's geometry; the arrays carry
+    their own shapes, which ``load_filter`` checks against it."""
+    arrays = {
+        f"{sid}_{name}": a
+        for sid, shard in flt.shards.items()
+        for name, a in shard.arrays().items()
+    }
+    head = json.dumps({"config": asdict(flt.config), "version": version}).encode()
+    tmp = path + ".tmp"
+    with open(tmp, "wb") as f:
+        np.savez(f, header=np.frombuffer(head, dtype=np.uint8), **arrays)
+    os.replace(tmp, path)
+
+
+def load_filter(path: str, config, version) -> ShardedFilter:
+    """Read a ``save_filter`` snapshot back as a ``config.empty()`` filter.
+    Raises ValueError if the snapshot's config or version differs from
+    ``config`` or ``version`` (checked before any shard array is read), or
+    if a shard's arrays do not have ``config``'s geometry. Loads with
+    ``allow_pickle=False``: a snapshot holds only numeric arrays."""
+    with np.load(path, allow_pickle=False) as z:
+        header = json.loads(z["header"].tobytes())
+        for key, want in (("config", asdict(config)), ("version", version)):
+            if header.get(key) != want:
+                raise ValueError(f"{key} differs")
+        parts: dict[int, dict[str, np.ndarray]] = {}
+        for name in z.files:
+            if name != "header":
+                sid, part = name.split("_", 1)
+                parts.setdefault(int(sid), {})[part] = z[name]
+    flt = config.empty()
+    for sid, arrays in parts.items():
+        flt._shard(sid).load_arrays(arrays)
+    return flt
 
 
 def build_filter_from_df(df, key_col: str, config, depth: int = 2) -> ShardedFilter:

@@ -32,7 +32,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from .bloom import ShardedFilter, _splitmix, shard_of
+from .bloom import ShardedFilter, _splitmix, same_geometry, shard_of
 
 _FP_INC = np.uint64(0xA24BAED4963EE407)  # fingerprint stream increment
 _IDX_INC = np.uint64(0x9FB21C651E98DF25)  # bucket-index stream increment
@@ -272,6 +272,19 @@ class CuckooShard:
         # multiplicity and break delete-by-copy
         self.overflow.update(other.overflow)
         return self
+
+    def arrays(self) -> dict[str, np.ndarray]:
+        """The table and the overflow multiset as (bucket, fp, count) rows."""
+        overflow = np.array(
+            [(b, fp, n) for (b, fp), n in sorted(self.overflow.items())], dtype=np.int64
+        ).reshape(-1, 3)
+        return {"table": self.table, "overflow": overflow}
+
+    def load_arrays(self, arrays: dict[str, np.ndarray]) -> None:
+        self.table = same_geometry(self.table, arrays["table"])
+        self.overflow.clear()
+        for b, fp, n in arrays["overflow"].tolist():
+            self.overflow[(b, fp)] = n
 
     @property
     def nbytes(self) -> int:

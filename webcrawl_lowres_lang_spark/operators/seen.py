@@ -6,10 +6,22 @@ Correctness comes ONLY from the exact table (Bloom has no false negatives,
 so a Bloom-negative is *definitely unseen* and can skip the join; the
 Bloom-positive minority goes through the exact left-anti join). At 10^10
 URLs the anti-join probe side shrinks from |candidates| to
-|candidates| × (hit rate + fpp), which is what makes per-round dedup
-affordable; the exact table is bucketed by ``pmod(url_hash, n_buckets)``
-so the join shuffles only matching buckets and scans prune to the buckets
-present in the candidate batch.
+|candidates| × (hit rate + fpp). The exact table is partitioned by
+``bucket = pmod(url_hash, n_buckets)``, but the join does not prune by
+it: the plan Spark picks is ``BroadcastHashJoin LeftAnti, BuildRight``
+with the WHOLE exact table as the broadcast build side (while it fits
+under the broadcast threshold set in ``session.py``), read by a scan whose
+only partition filter is ``isnotnull(bucket)``. On the filter path,
+Catalyst also copies the ``might_contain`` probe onto that scan (the join
+keys are equal), so every table row goes through the pandas UDF each
+round. Past the threshold the join becomes a sort-merge join that
+shuffles the whole table. So the per-round verification cost grows with
+the table, not the suspects.
+
+The live filter is also committed state: ``save_snapshot`` writes it with
+the ``url_seen`` version it covers (``tablestore.table_version``) at each
+round's checkpoint, and ``restore`` loads it on resume only if that
+version and the filter config still match, rebuilding it otherwise.
 
 Filter sizing (measured at 10^8 keys — BASELINE.md "seen-filter
 capacity"): 1% fpp costs 9.59 bits/key, so 10^8 keys = 114 MiB (easy
@@ -26,14 +38,28 @@ shrink.
 from __future__ import annotations
 
 import os
+import zipfile
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
-from ..sources.tablestore import append_table, read_table, rewrite_table, table_exists
-from .bloom import BloomConfig, ShardedFilter, build_filter_from_df, shard_of
+from ..sources.tablestore import (
+    append_table,
+    read_table,
+    rewrite_table,
+    table_exists,
+    table_version,
+)
+from .bloom import (
+    BloomConfig,
+    ShardedFilter,
+    build_filter_from_df,
+    load_filter,
+    save_filter,
+    shard_of,
+)
 from .cuckoo import CuckooConfig, PartitionedCuckoo
 
 SEEN_SCHEMA = StructType([
@@ -327,3 +353,38 @@ class SeenSet:
         """Start a fresh crawl with an empty live filter (everything unseen)."""
         self._bloom = self.filter_config.empty()
         self._rebroadcast()
+
+    # -- filter snapshot ---------------------------------------------------------
+
+    def _version(self) -> list[list]:
+        # JSON form of table_version: what a snapshot header stores
+        return [list(v) for v in table_version(self.path)]
+
+    def save_snapshot(self, path: str) -> None:
+        """Write the live filter to ``path`` with the ``url_seen`` version
+        it covers (``bloom.save_filter``: numpy arrays and a JSON header,
+        temp file + rename)."""
+        save_filter(self._bloom, path, self._version())
+
+    def restore(self, path: str | None) -> str:
+        """Make the live filter the snapshot at ``path`` if it was written
+        under this filter config and covers exactly the current table;
+        otherwise rebuild it from the table (``build_bloom``). Returns
+        ``"snapshot"`` or ``"rebuild: <reason>"``. A snapshot older or
+        newer than the table is never restored: a key of the table missing
+        from the filter would be a pre-filter false negative."""
+        reason = "no snapshot"
+        if path is not None:
+            try:
+                self._bloom = load_filter(path, self.filter_config, self._version())
+            except FileNotFoundError:
+                reason = "snapshot file missing"
+            except ValueError as e:  # config, version or geometry differs
+                reason = str(e)
+            except (OSError, EOFError, KeyError, zipfile.BadZipFile) as e:  # not a snapshot
+                reason = f"snapshot unreadable: {type(e).__name__}: {e}"
+            else:
+                self._rebroadcast()
+                return "snapshot"
+        self.build_bloom()
+        return f"rebuild: {reason}"

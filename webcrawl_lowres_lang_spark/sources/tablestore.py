@@ -1,6 +1,6 @@
 """The Iceberg seam: every persistent engine table (URL-seen set, crawl
 ledger/frontier snapshots, phash-representative side table) reads and
-writes through these four functions and NOWHERE else.
+writes through these functions and NOWHERE else.
 
 In this sandbox the backing store is an append-only parquet directory per
 table — the documented Iceberg stand-in (same layout assumptions: no
@@ -40,6 +40,23 @@ def table_exists(path: str) -> bool:
             if any(m.endswith(".parquet") for m in os.listdir(sub)):
                 return True
     return False
+
+
+def table_version(path: str) -> list[tuple[str, int]]:
+    """The table's version of record: the sorted (relative path, size) list
+    of its data files, the stand-in for Iceberg's current snapshot id. Any
+    append, overwrite or rewrite changes it. Files and dirs whose names
+    start with ``_`` or ``.`` are skipped, as Spark's reader skips them (an
+    interrupted write's ``_temporary`` dir is not part of the table)."""
+    _recover_interrupted_rewrite(path)
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for n in files:
+            if n.endswith(".parquet") and not n.startswith(("_", ".")):
+                full = os.path.join(root, n)
+                out.append((os.path.relpath(full, path), os.path.getsize(full)))
+    return sorted(out)
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:

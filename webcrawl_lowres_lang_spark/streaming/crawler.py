@@ -14,8 +14,11 @@ One round =
      (priority DESC, url_hash ASC — total and partition-invariant)
   6. discover outlinks -> canonicalize -> exclusion filter -> batch dedup
      -> seen-set anti-join -> append to frontier; add to seen set
-  7. checkpoint: ledger/frontier parquet snapshots + metrics JSON with
-     per-partition lineage (north rule resumability)
+  7. checkpoint: ledger/frontier parquet snapshots, a snapshot of the live
+     seen filter tagged with the ``url_seen`` version it covers, then the
+     metrics JSON with per-partition lineage (north rule resumability);
+     the metrics file is the round's commit marker and names the filter
+     snapshot, which ``resume`` loads instead of rebuilding the filter
 
 State tables mirror FIXTURES.md §5: frontier / url_seen / ledger.
 Everything is a pure function of (seed, fixture sizes, budget), so two
@@ -139,6 +142,8 @@ class CrawlEngine:
         self.phase_wall: list[tuple[str, float]] = []
         self.round = 0
         self.metrics: list[dict] = []
+        # how resume() got the live filter: "snapshot" or "rebuild: <reason>"
+        self.filter_restore: str | None = None
         self._seen_total = 0  # running counter — avoids a store scan per round
         # T4 rate-limit semantics: a 429 from a domain exhausts its budget
         # for the REST OF THE CRAWL (reference: stop_event on HTTP 429,
@@ -425,6 +430,8 @@ class CrawlEngine:
         # exactly what an Iceberg snapshot's manifest records per file)
         self._label(f"r{r}:ckpt-meta")
         parts = _parquet_file_rows(os.path.join(self.dir, f"frontier/r{r}"))
+        self._label(f"r{r}:ckpt-filter")
+        snapshot = self._save_filter_snapshot(r)
         m = {
             "round": r,
             "fetched": int(led_stats["fetched"]),
@@ -438,10 +445,27 @@ class CrawlEngine:
             # override) — resume() must crawl with the same queries and
             # scoring, not silently revert to the fixture seed lexicon
             "lexicon_rows": [[t, int(f)] for t, f in self.lex_rows],
+            "seen_filter_snapshot": snapshot,
         }
+        if self.filter_restore and not self.metrics:  # first round after resume
+            m["filter_restore"] = self.filter_restore
         self.metrics.append(m)
         with open(os.path.join(self.dir, f"metrics_round{r}.json"), "w") as f:
             json.dump(m, f, indent=1)
+        # only now, with the marker naming the new snapshot on disk, may the
+        # snapshots of earlier rounds go
+        snap_dir = os.path.join(self.dir, "seen_filter")
+        for n in os.listdir(snap_dir):
+            if os.path.join("seen_filter", n) != snapshot:
+                os.remove(os.path.join(snap_dir, n))
+
+    def _save_filter_snapshot(self, r: int) -> str:
+        """Snapshot the live seen filter as committed round ``r``'s; returns
+        its path relative to the checkpoint dir."""
+        rel = os.path.join("seen_filter", f"r{r}.npz")
+        os.makedirs(os.path.join(self.dir, "seen_filter"), exist_ok=True)
+        self.seen.save_snapshot(os.path.join(self.dir, rel))
+        return rel
 
     # -- TTL re-crawl ----------------------------------------------------------
 
@@ -452,9 +476,16 @@ class CrawlEngine:
         ``seen_filter='cuckoo'`` the live filter drops fingerprints in
         O(1); the Bloom path rebuilds the filter from the rewritten exact
         table (see SeenSet.expire). Reference analog: the bulk reset ops
-        (sql.py:312-334) that re-queue already-handled URLs."""
+        (sql.py:312-334) that re-queue already-handled URLs.
+
+        The expiry rewrites ``url_seen``, so the last committed round's
+        filter snapshot no longer covers it; it is written again (same
+        file, temp + rename). A crash between the rewrite and that write
+        leaves a snapshot whose version differs, which resume rebuilds."""
         removed = self.seen.expire(rows.select("url_hash"))
         self._seen_total -= removed
+        if removed and self.round > 0:
+            self._save_filter_snapshot(self.round - 1)
         return removed
 
     # -- resume ---------------------------------------------------------------------
@@ -462,8 +493,14 @@ class CrawlEngine:
     @classmethod
     def resume(cls, spark: SparkSession, checkpoint_dir: str) -> "CrawlEngine":
         """Rebuild engine state from the latest checkpoint: config + round
-        from metrics, seen-set Bloom from its exact backing table, frontier
-        from the last snapshot. Continue with ``run(frontier=resumed)``."""
+        from metrics, frontier from the last snapshot, and the live seen
+        filter from the filter snapshot the metrics file names. The
+        snapshot is loaded only if its filter config and ``url_seen``
+        version match the live ones; otherwise (no snapshot, another
+        config, or a table that moved on, as after a crash between
+        ``seen.add`` and the marker) the filter is rebuilt from the exact
+        table. ``filter_restore`` records which, and why. Continue with
+        ``run(frontier=resumed)``."""
         rounds = sorted(
             int(n.split("metrics_round")[1].split(".")[0])
             for n in os.listdir(checkpoint_dir)
@@ -484,7 +521,10 @@ class CrawlEngine:
         eng.round = last + 1
         eng.blocked_domains = set(meta.get("blocked_domains", []))
         eng._seen_total = int(meta.get("seen_total", 0))
-        eng.seen.build_bloom()
+        snapshot = meta.get("seen_filter_snapshot")
+        eng.filter_restore = eng.seen.restore(
+            os.path.join(checkpoint_dir, snapshot) if snapshot else None
+        )
         return eng
 
     def resumed_frontier(self) -> DataFrame:

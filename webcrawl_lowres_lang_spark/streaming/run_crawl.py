@@ -14,7 +14,9 @@ Emits one JSON line per round (the engine's per-partition lineage +
 frontier/fetch metrics) and a final summary line
 ``{"summary": {urls_fetched, urls_seen, rounds, secs, urls_per_sec}}``.
 ``--resume`` continues from the newest round checkpoint in --checkpoint
-(snapshot resumability, north rule) instead of starting fresh.
+(snapshot resumability, north rule) instead of starting fresh; its summary
+also carries ``filter_restore`` (``"snapshot"`` when the committed seen
+filter was loaded, ``"rebuild: <reason>"`` when it was rebuilt).
 """
 
 from __future__ import annotations
@@ -79,14 +81,17 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(m))
     secs = time.perf_counter() - t0
     fetched = eng.ledger_df().count()
-    print(json.dumps({"summary": {
+    summary = {
         "urls_fetched": int(fetched),
         "urls_seen": int(eng.seen.count()),
         "rounds": int(eng.round),
         "secs": round(secs, 2),
         "urls_per_sec": round(fetched / secs, 2) if secs else None,
         "checkpoint": args.checkpoint,
-    }}))
+    }
+    if args.resume:
+        summary["filter_restore"] = eng.filter_restore
+    print(json.dumps({"summary": summary}))
     return 0
 
 
