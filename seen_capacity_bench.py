@@ -9,8 +9,8 @@ time, the write and load time and file size of the filter snapshot a
 crawl commits every round (``save_filter`` / ``load_filter``, what
 ``SeenSet.save_snapshot`` and ``restore`` run), single-core numpy probe
 throughput + observed false-positive rate, and end-to-end distributed
-probe throughput through the same pandas-UDF-over-broadcast path
-``SeenSet.filter_unseen`` uses.
+probe throughput through ``SeenSet.filter_unseen``'s own probe pass
+(``mapInArrow`` over the broadcast filter).
 
 Prints ONE JSON line. Run: ``python seen_capacity_bench.py`` (env:
 SEEN_BENCH_KEYS to override the key count).
@@ -26,7 +26,6 @@ import tempfile
 import time
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -37,6 +36,7 @@ from webcrawl_lowres_lang_spark.operators.bloom import (  # noqa: E402
     load_filter,
     save_filter,
 )
+from webcrawl_lowres_lang_spark.operators.seen import SeenSet  # noqa: E402
 from webcrawl_lowres_lang_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 
@@ -99,17 +99,15 @@ def main() -> None:
     assert bool(hit_present.all()), "Bloom false negative — impossible"
     observed_fpp = float(hit_absent.mean())
 
-    # distributed probe: the filter_unseen fast path shape — broadcast
-    # filter probed inside a vectorized pandas UDF over an Arrow batch
-    @F.pandas_udf("boolean")
-    def might_contain(keys: pd.Series) -> pd.Series:
-        return pd.Series(bc.value.might_contain(keys.to_numpy(dtype=np.int64)))
-
+    # distributed probe: filter_unseen's probe pass over the broadcast
+    # filter (it never reads the set's table, so the path need not exist)
+    seen = SeenSet(spark, os.path.join(snap_dir, "url_seen"), bloom_config=cfg)
+    seen._bloom_bc = bc
     probe_df = spark.range(0, 2 * n_probe, numPartitions=DEFAULT_CPUS).select(
         F.xxhash64((F.col("id") + F.lit(n_keys - n_probe))).alias("url_hash")
     )
     t0 = time.perf_counter()
-    hits = probe_df.filter(might_contain(F.col("url_hash"))).count()
+    hits = seen._with_maybe_seen(probe_df).filter("__maybe_seen").count()
     dist_secs = time.perf_counter() - t0
 
     print(

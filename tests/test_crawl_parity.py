@@ -377,8 +377,11 @@ def test_ttl_expire_bloom_requires_rebuild(spark, tmp_path):
     ))
     assert {r["url_hash"] for r in fresh.select("url_hash").collect()} == hashes
     # the expiry wrote the committed filter snapshot again for the
-    # rewritten table, so a resume still loads it
-    assert CrawlEngine.resume(spark, str(tmp_path / "ck")).filter_restore == "snapshot"
+    # rewritten table, so a resume still loads it, and rewrote the marker's
+    # seen_total, so the resumed count is the table's
+    res = CrawlEngine.resume(spark, str(tmp_path / "ck"))
+    assert res.filter_restore == "snapshot"
+    assert res._seen_total == eng._seen_total == res.seen.count()
 
 
 def test_smoke_ledger_fixture_in_sync():

@@ -163,3 +163,89 @@ def test_bucketed_join_needs_no_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_cand_b")
         spark.sql("USE default")
         spark.sql("DROP DATABASE IF EXISTS bdemo")
+
+
+# -- the crawl's discovery and seen-set plans -----------------------------------
+
+_PYTHON_NODES = {"ArrowEvalPython", "BatchEvalPython", "MapInArrow", "MapInPandas"}
+
+
+def _nodes(plan):
+    """Every node of a JVM logical plan, depth first (a cached frame's
+    InMemoryRelation is a leaf, so fixture generators are not walked)."""
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _nodes(children.apply(i))
+
+
+def _joins(plan, join_type: str) -> list:
+    return [n for n in _nodes(plan) if n.nodeName() == "Join" and n.joinType().toString() == join_type]
+
+
+def _python_nodes(plan) -> list[str]:
+    return [n.nodeName() for n in _nodes(plan) if n.nodeName() in _PYTHON_NODES]
+
+
+def _optimized(df):
+    return df._jdf.queryExecution().optimizedPlan()
+
+
+def test_discovery_keys_run_above_the_link_join(spark, tmp_path):
+    """The round's discovery frame (``_resolve_discoveries`` then
+    ``filter_unseen``) runs Python exactly twice per discovered row: the
+    keys pass and the filter probe. Nothing under the join with the link
+    graph runs Python, so the canonicalizer never sees the whole graph."""
+    from webcrawl_lowres_lang_spark.streaming.crawler import (
+        DISCOVERY_SCHEMA,
+        CrawlConfig,
+        CrawlEngine,
+    )
+
+    cfg = CrawlConfig(n_urls=200, n_pages=10, n_hosts=8, rounds=1, validate_pixels=False)
+    eng = CrawlEngine(spark, cfg, str(tmp_path / "ck"))
+    eng.seen.enable_empty_bloom()
+    eng.seen.add(spark.range(50).select(F.xxhash64("id").alias("url_hash")))
+    disc = spark.createDataFrame([(i, 0, 0.0) for i in range(40)], DISCOVERY_SCHEMA)
+    plan = _optimized(eng.seen.filter_unseen(eng._resolve_discoveries(disc)))
+    link_joins = _joins(plan, "Inner")
+    assert link_joins, plan.toString()
+    for join in link_joins:
+        assert _python_nodes(join) == [], plan.toString()
+    assert len(link_joins) == 1, plan.toString()  # one lineage, no union branches
+    assert _python_nodes(plan) == ["MapInArrow", "MapInArrow"], plan.toString()
+
+
+def test_seen_probe_stays_on_candidates(spark, tmp_path):
+    """``filter_unseen`` with a live filter is one left-anti join (no
+    union of a fast and a verified branch) whose table side runs no
+    Python: the probe is never copied onto the ``url_seen`` scan."""
+    from webcrawl_lowres_lang_spark.operators.bloom import BloomConfig
+    from webcrawl_lowres_lang_spark.operators.seen import SeenSet
+
+    seen = SeenSet(spark, str(tmp_path / "seen"), n_buckets=8,
+                   bloom_config=BloomConfig(capacity=10_000, fpp=0.01, num_shards=8))
+    seen.enable_empty_bloom()
+    seen.add(spark.range(100).withColumnRenamed("id", "url_hash"))
+    cands = spark.range(50, 150).withColumnRenamed("id", "url_hash")
+    fresh = seen.filter_unseen(cands)
+    plan = _optimized(fresh)
+    (anti,) = _joins(plan, "LeftAnti")
+    assert not [n for n in _nodes(plan) if n.nodeName() == "Union"], plan.toString()
+    assert _python_nodes(anti.children().apply(0)) == ["MapInArrow"], plan.toString()
+    assert _python_nodes(anti.children().apply(1)) == [], plan.toString()
+    assert sorted(r["url_hash"] for r in fresh.collect()) == list(range(100, 150))
+
+
+def test_filter_unseen_without_table_plans_no_join(spark, tmp_path):
+    """Before the first append there is no ``url_seen`` table: every
+    candidate is unseen, and ``filter_unseen`` plans neither a join nor a
+    probe."""
+    from webcrawl_lowres_lang_spark.operators.seen import SeenSet
+
+    seen = SeenSet(spark, str(tmp_path / "seen"), n_buckets=8)
+    seen.enable_empty_bloom()
+    cands = spark.range(20).withColumnRenamed("id", "url_hash")
+    plan = _optimized(seen.filter_unseen(cands))
+    assert not [n for n in _nodes(plan) if n.nodeName() == "Join"], plan.toString()
+    assert _python_nodes(plan) == [], plan.toString()

@@ -229,3 +229,18 @@ def test_robots_agent_matching_robotparser_semantics():
         expected_blocked = not rp.can_fetch("lrl-crawler/1.0", "http://h/x")
         has_disallow, _ = _parse_robots_body(body, agent="lrl-crawler/1.0")
         assert has_disallow == expected_blocked, body
+
+
+def test_robots_bodies_plan_hits_an_earlier_cache(spark):
+    """Two engines in one session (a crawl, then its resume) build equal
+    robots plans, so the second engine's parsed robots table reads the
+    first one's cache instead of parsing every body again."""
+    from webcrawl_lowres_lang_spark.operators.politeness import parse_robots_bodies
+
+    first = parse_robots_bodies(fx.gen_robots_bodies(spark, 42, 13)).cache()
+    try:
+        again = parse_robots_bodies(fx.gen_robots_bodies(spark, 42, 13))
+        leaves = again._jdf.queryExecution().optimizedPlan().collectLeaves()
+        assert [leaves.apply(i).nodeName() for i in range(leaves.size())] == ["InMemoryRelation"]
+    finally:
+        first.unpersist()

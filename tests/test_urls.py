@@ -2,8 +2,9 @@
 
 from __future__ import annotations
 
-from hypothesis import given, settings
+from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from webcrawl_lowres_lang_spark.functions.urls import (
     canonicalize_one,
@@ -80,7 +81,9 @@ def test_with_url_keys_spark(spark):
         [("HTTP://Example.COM:80/a?b=2&a=1",), ("/relative",), ("https://x.co.nz/p",)],
         ["url"],
     )
-    rows = {r["url"]: r for r in with_url_keys(df).collect()}
+    keyed = with_url_keys(df)
+    assert keyed.columns == ["url", "url_canon", "host", "domain", "url_hash", "md5_hash"]
+    rows = {r["url"]: r for r in keyed.collect()}
     good = rows["HTTP://Example.COM:80/a?b=2&a=1"]
     assert good["url_canon"] == "http://example.com/a?a=1&b=2"
     assert good["host"] == "example.com"
@@ -89,3 +92,57 @@ def test_with_url_keys_spark(spark):
     assert len(good["md5_hash"]) == 32
     assert rows["/relative"]["url_canon"] is None
     assert rows["https://x.co.nz/p"]["domain"] == "x.co.nz"
+
+
+def _assert_keys_match_parse_url(df):
+    """``with_url_keys``' host and domain equal the JVM's
+    ``parse_url(url_canon, 'HOST')`` and ``registrable_domain_one`` of it."""
+    from webcrawl_lowres_lang_spark.functions.urls import with_url_keys
+
+    rows = (
+        with_url_keys(df)
+        .select("url_canon", "host", "domain",
+                F.parse_url("url_canon", F.lit("HOST")).alias("jvm_host"))
+        .collect()
+    )
+    assert any(r["url_canon"] is not None for r in rows)
+    for r in rows:
+        assert r["host"] == r["jvm_host"], r
+        assert r["domain"] == registrable_domain_one(r["jvm_host"]), r
+
+
+def test_keys_pass_matches_parse_url_on_fixture_link_graphs(spark):
+    from perfbench.workloads import NAMES, workload
+    from webcrawl_lowres_lang_spark.sources import fixtures as fx
+
+    for name in NAMES:
+        c = workload(name, 1).config
+        _assert_keys_match_parse_url(
+            fx.gen_link_graph(spark, c.seed, c.n_urls, c.n_hosts, c.n_pages).select("url")
+        )
+
+
+_LABEL = st.from_regex(r"[a-zA-Z0-9]([a-zA-Z0-9-]{0,6}[a-zA-Z0-9])?", fullmatch=True)
+# a dotted host's last label starts with a letter (else it is no hostname)
+_TOP = st.from_regex(r"[a-zA-Z]([a-zA-Z0-9-]{0,4}[a-zA-Z0-9])?", fullmatch=True)
+_DNS = st.builds(lambda ls, t: ".".join([*ls, t]), st.lists(_LABEL, max_size=3), _TOP)
+_IPV4 = st.lists(st.integers(0, 255), min_size=4, max_size=4).map(lambda o: ".".join(map(str, o)))
+_URL = st.builds(
+    "{}://{}{}{}{}{}".format,
+    st.sampled_from(["http", "HTTP", "https", "ftp", "ws", "wss"]),
+    st.one_of(st.just(""), st.from_regex(r"[a-z0-9]{1,5}(:[a-z0-9]{0,5})?@", fullmatch=True)),
+    st.one_of(_DNS, _IPV4, st.sampled_from(["images.example.co.nz", "www.waikato.ac.nz"])),
+    st.one_of(st.just(""), st.integers(0, 65535).map(":{}".format)),
+    st.from_regex(r"(/[a-zA-Z0-9._~-]{0,6}){0,3}", fullmatch=True),
+    st.from_regex(r"(\?[a-z0-9=&]{0,8})?", fullmatch=True),
+)
+# userinfo, ports and IPv4 in every corpus, whatever hypothesis draws
+_FIXED = ["http://u:pw@10.0.0.1:8080/x", "https://user@Example.COM:443/a/../b?y=1&x=2",
+          "http://a.b.c.example.co.nz:81", "http://192.168.0.1/"]
+
+
+@settings(max_examples=5, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large])
+@given(st.lists(_URL, min_size=20, max_size=60))
+def test_keys_pass_matches_parse_url_on_generated_urls(spark, urls):
+    _assert_keys_match_parse_url(spark.createDataFrame([(u,) for u in urls + _FIXED], "url string"))

@@ -12,21 +12,27 @@ Reference semantics being re-expressed (studied, not ported):
 Design notes for 100 TB scale:
 - canonicalization is the only string-heavy step that genuinely needs
   Python (dot-segment resolution + percent-decoding have no Spark
-  built-in); it runs as an Arrow-batched pandas UDF with a precompiled
-  regex set — one Python call per ~10k rows, not per row.
+  built-in). ``with_url_keys`` runs it, together with the host and the
+  registrable domain that derive from the canonical form, as ONE
+  ``mapInArrow`` pass: each row crosses into Python once, and one Python
+  call handles a whole Arrow batch (~10k rows). The pass is opaque to
+  Catalyst, so a filter on ``url_canon`` (the relative-URL guard) cannot
+  be pushed below it: the canonicalizer runs only over the rows that
+  reach it, never over a join input such as the whole link graph.
 - hashing stays JVM-side (``F.xxhash64`` / ``F.md5``) so the hot dedup
   path never leaves codegen.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 from urllib.parse import quote, urlsplit
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import StringType, StructField, StructType
 
 # --- canonicalization -------------------------------------------------------
 
@@ -151,16 +157,30 @@ def registrable_domain_one(host: str | None) -> str | None:
     return ".".join(labels[-2:])
 
 
-def _canonicalize_series(s: pd.Series) -> pd.Series:
-    return s.map(canonicalize_one)
+def _host_of_canon(canon: str | None) -> str | None:
+    """Host of a canonical URL: its authority without userinfo and port
+    (the sequential oracle's rule, tests/reference_oracle.py). It equals
+    Spark's ``parse_url(url_canon, 'HOST')`` wherever Java's URI parser
+    accepts the host. ``canonicalize_one`` always writes a path, so the
+    authority ends at the first '/' after the scheme."""
+    if canon is None:
+        return None
+    return canon.split("://", 1)[1].split("/", 1)[0].split("@")[-1].split(":")[0]
 
 
-def _regdomain_series(s: pd.Series) -> pd.Series:
-    return s.map(registrable_domain_one)
+_KEY_COLS = ("url_canon", "host", "domain")
 
 
-canonicalize_url = F.pandas_udf(_canonicalize_series, StringType())
-registrable_domain = F.pandas_udf(_regdomain_series, StringType())
+def _url_keys_batches(batches, url_col: str):
+    """mapInArrow body: append url_canon / host / domain to each batch."""
+    for b in batches:
+        canon = [canonicalize_one(u) for u in b.column(url_col).to_pylist()]
+        host = [_host_of_canon(c) for c in canon]
+        domain = [registrable_domain_one(h) for h in host]
+        keys = [pa.array(v, pa.string()) for v in (canon, host, domain)]
+        yield pa.RecordBatch.from_arrays(
+            b.columns + keys, names=b.schema.names + list(_KEY_COLS)
+        )
 
 
 # --- hashing (JVM-side) -----------------------------------------------------
@@ -183,14 +203,16 @@ def md5_raw(url: Column | str) -> Column:
 def with_url_keys(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Attach url_canon / host / registrable domain / hash keys.
 
-    One pandas-UDF pass for canonicalization, JVM built-ins for the rest;
-    rows failing the absolute-URL guard keep url_canon NULL (filter with
-    ``.filter(col('url_canon').isNotNull())`` to reproduce the reference
-    guard at lrl-crawler.py:157-162).
+    One ``mapInArrow`` pass computes ``url_canon``, ``host`` and ``domain``;
+    ``url_hash`` and ``md5_hash`` are JVM built-ins over its output. Rows
+    failing the absolute-URL guard keep url_canon (and host, domain) NULL
+    (filter with ``.filter(col('url_canon').isNotNull())`` to reproduce the
+    reference guard at lrl-crawler.py:157-162).
     """
-    df = df.withColumn("url_canon", canonicalize_url(F.col(url_col)))
-    df = df.withColumn("host", F.parse_url(F.col("url_canon"), F.lit("HOST")))
-    df = df.withColumn("domain", registrable_domain(F.col("host")))
+    schema = StructType(
+        df.schema.fields + [StructField(c, StringType(), True) for c in _KEY_COLS]
+    )
+    df = df.mapInArrow(functools.partial(_url_keys_batches, url_col=url_col), schema)
     df = df.withColumn("url_hash", url_hash64("url_canon"))
     df = df.withColumn("md5_hash", md5_raw(url_col))
     return df

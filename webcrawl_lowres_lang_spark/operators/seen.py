@@ -2,21 +2,27 @@
 fast path (SURVEY.md J5/E4; reference semantics: dedup-on-insert at
 ``sql.py:147-159, 180-189, 213-246``).
 
-Correctness comes ONLY from the exact table (Bloom has no false negatives,
-so a Bloom-negative is *definitely unseen* and can skip the join; the
-Bloom-positive minority goes through the exact left-anti join). At 10^10
-URLs the anti-join probe side shrinks from |candidates| to
-|candidates| × (hit rate + fpp). The exact table is partitioned by
+Correctness comes ONLY from the exact table (the filter has no false
+negatives, so a filter-negative is *definitely unseen*). ``filter_unseen``
+probes the live filter once per candidate, in one ``mapInArrow`` pass
+that appends ``__maybe_seen``, and then runs ONE left-anti join against
+the exact table whose condition includes that flag: a filter-negative
+row never matches, so it passes without verification. (A union of a
+fast and a verified branch would plan the candidate lineage twice.) The
+pass is opaque to Catalyst, so the probe stays on the candidates; a
+pandas-UDF filter on ``url_hash`` would be copied onto the table scan,
+because the equal join keys let constraint propagation infer it there.
+Before the first append there is no table, and the candidates come back
+untouched. The exact table is partitioned by
 ``bucket = pmod(url_hash, n_buckets)``, but the join does not prune by
 it: the plan Spark picks is ``BroadcastHashJoin LeftAnti, BuildRight``
 with the WHOLE exact table as the broadcast build side (while it fits
 under the broadcast threshold set in ``session.py``), read by a scan whose
-only partition filter is ``isnotnull(bucket)``. On the filter path,
-Catalyst also copies the ``might_contain`` probe onto that scan (the join
-keys are equal), so every table row goes through the pandas UDF each
-round. Past the threshold the join becomes a sort-merge join that
-shuffles the whole table. So the per-round verification cost grows with
-the table, not the suspects.
+only partition filter is ``isnotnull(bucket)``, and every candidate
+probes the hash table (the ``__maybe_seen`` flag only gates the match).
+Past the threshold the join becomes a sort-merge join that shuffles the
+whole table. So the per-round verification cost grows with the table,
+not the suspects.
 
 The live filter is also committed state: ``save_snapshot`` writes it with
 the ``url_seen`` version it covers (``tablestore.table_version``) at each
@@ -41,6 +47,7 @@ import os
 import zipfile
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
@@ -132,35 +139,47 @@ class SeenSet:
     def filter_unseen(self, candidates: DataFrame, use_bloom: bool = True) -> DataFrame:
         """Rows of ``candidates`` whose ``url_hash`` is not in the set.
 
-        Plan shape: [bloom pre-filter (pandas UDF, broadcast shards)] →
-        left-anti join against the exact table on (bucket, url_hash).
-        Without a loaded Bloom it is the plain exact anti-join.
+        Plan shape: with no ``url_seen`` table yet, the candidates come
+        back untouched (no join). Otherwise one ``mapInArrow`` pass probes
+        the live filter and appends ``__maybe_seen`` to each candidate,
+        then ONE left-anti join against the exact table on (bucket,
+        url_hash) whose condition also requires ``__maybe_seen``: a
+        filter-negative row can never match, so it survives the join
+        unverified. The probe is opaque to Catalyst, so it is never copied
+        onto the table scan. Without a loaded filter (or with
+        ``use_bloom=False``) it is the plain exact anti-join.
         """
-        seen = self.load()
+        if not self._exists():
+            return candidates
+        seen = self.load().select(
+            F.col("bucket").alias("__seen_bucket"), F.col("url_hash").alias("__seen_hash")
+        )
         cands = self._with_bucket(candidates)
+        match = (F.col("bucket") == F.col("__seen_bucket")) & (
+            F.col("url_hash") == F.col("__seen_hash")
+        )
         if use_bloom and self._bloom_bc is not None:
-            maybe = self._might_contain_col(cands, "url_hash")
-            cands = cands.withColumn("__maybe_seen", maybe)
-            # definitely-unseen fast path skips the join entirely
-            fresh = cands.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
-            suspect = cands.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-            verified = suspect.join(
-                seen.select("bucket", "url_hash"), ["bucket", "url_hash"], "left_anti"
-            )
-            return fresh.unionByName(verified).drop("bucket")
-        return cands.join(
-            seen.select("bucket", "url_hash"), ["bucket", "url_hash"], "left_anti"
-        ).drop("bucket")
+            cands = self._with_maybe_seen(cands)
+            match = F.col("__maybe_seen") & match
+        return cands.join(seen, match, "left_anti").drop("bucket", "__maybe_seen")
 
-    def _might_contain_col(self, df: DataFrame, key_col: str):
+    def _with_maybe_seen(self, df: DataFrame) -> DataFrame:
+        """Append ``__maybe_seen``: the live filter's answer for each row's
+        ``url_hash`` (one ``mapInArrow`` pass, the broadcast filter read once
+        per Python worker)."""
         bc = self._bloom_bc
 
-        @F.pandas_udf(BooleanType())
-        def might_contain(keys: pd.Series) -> pd.Series:
+        def probe(batches):
             flt = bc.value  # the live ShardedFilter
-            return pd.Series(flt.might_contain(keys.to_numpy()))
+            for b in batches:
+                keys = b.column("url_hash").to_numpy()
+                yield pa.RecordBatch.from_arrays(
+                    b.columns + [pa.array(flt.might_contain(keys))],
+                    names=b.schema.names + ["__maybe_seen"],
+                )
 
-        return might_contain(F.col(key_col))
+        schema = StructType(df.schema.fields + [StructField("__maybe_seen", BooleanType(), False)])
+        return df.mapInArrow(probe, schema)
 
     # -- mutation -------------------------------------------------------------
 

@@ -40,7 +40,7 @@ _CANON_URL_SQL = "'http://' || lower(source) || '.example.com/a/doc/' || doc_id:
     survey_ref="C1,C3,F3,U7",
 )
 def c1_c3_url_canonicalize_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The REAL canonicalizer pandas UDF runs on the Spark side; the oracle
+    # The REAL canonicalizer (with_url_keys' Arrow pass) runs on the Spark side; the oracle
     # states the expected canonical form via independent string ops —
     # a cross-check, not a mirror of the same code.
     from ..functions.urls import with_url_keys
@@ -74,7 +74,7 @@ def c1_c3_url_canonicalize_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def f2_f3_guards(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Relative-URL guard (engine: canonicalizer returns NULL) + excluded-
     # domain SUBSTRING filter (reference fileutils.py:104-106 semantics).
-    from ..functions.urls import canonicalize_url
+    from ..functions.urls import with_url_keys
 
     d = load(spark, sf_dir, "documents").select(
         "doc_id",
@@ -92,7 +92,7 @@ def f2_f3_guards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     excl = F.array(F.lit("tracker"), F.lit("adserver"))
     return (
-        d.withColumn("url_canon", canonicalize_url(F.col("url")))
+        with_url_keys(d)
         .filter(F.col("url_canon").isNotNull())  # F3 guard
         .filter(~F.exists(excl, lambda s: F.col("url").contains(s)))  # F2 substring
         .select("doc_id", "url")

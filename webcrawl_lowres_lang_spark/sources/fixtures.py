@@ -204,8 +204,12 @@ def host_for(seed: int, k: int, n_hosts: int) -> str:
     """Zipf-skewed host choice (north rule: host skew is the norm).
     u^3 concentrates ~50% of URLs on ~12% of hosts."""
     u = _u(seed, k, 20)
-    hid = int((u**3) * n_hosts)
-    # each hid is its own REGISTRABLE domain (politeness is keyed on it)
+    return host_name(int((u**3) * n_hosts))
+
+
+def host_name(hid: int) -> str:
+    """Host of host id ``hid``; each hid is its own REGISTRABLE domain
+    (politeness is keyed on it)."""
     if hid % 17 == 3:
         return f"img.tracker{hid}.com"  # excluded-substring hosts (F2)
     if hid % 11 == 5:
@@ -304,25 +308,19 @@ def gen_outlinks(spark: SparkSession, seed: int, n_urls: int) -> DataFrame:
 # --- robots fixtures --------------------------------------------------------------
 
 
-def gen_robots_rows(seed: int, n_hosts: int) -> list[dict]:
-    """Per-host robots entries: hosts with id ≡ 0 (mod 7) disallow
+def robots_row(hid: int) -> dict:
+    """Robots entry of host id ``hid``: hosts with id ≡ 0 (mod 7) disallow
     /gallery/<id ≡ 7 mod 13>; hosts ≡ 0 (mod 5) declare a crawl delay."""
-    rows = []
-    for hid in range(n_hosts):
-        if hid % 17 == 3:
-            host = f"img.tracker{hid}.com"
-        elif hid % 11 == 5:
-            host = f"media.pix{hid}.co.nz"
-        else:
-            host = f"cdn.host{hid}.com"
-        rows.append(
-            {
-                "host": host,
-                "respect_disallow": hid % 7 == 0,
-                "crawl_delay": 2.0 if hid % 5 == 0 else 0.0,
-            }
-        )
-    return rows
+    return {
+        "host": host_name(hid),
+        "respect_disallow": hid % 7 == 0,
+        "crawl_delay": 2.0 if hid % 5 == 0 else 0.0,
+    }
+
+
+def gen_robots_rows(seed: int, n_hosts: int) -> list[dict]:
+    """The parsed robots cache rows of hosts 0..n_hosts-1."""
+    return [robots_row(hid) for hid in range(n_hosts)]
 
 
 def gen_robots(spark: SparkSession, seed: int, n_hosts: int = N_HOSTS_DEFAULT) -> DataFrame:
@@ -359,9 +357,25 @@ def render_robots_txt(host: str, respect_disallow: bool, crawl_delay: float, hid
 def gen_robots_bodies(spark: SparkSession, seed: int, n_hosts: int = N_HOSTS_DEFAULT) -> DataFrame:
     """(host, body) robots.txt fetch results — the raw-source twin of
     gen_robots's parsed cache (reference: per-URL robotparser evaluation,
-    lrl-crawler.py:173-182)."""
-    rows = [
-        (r["host"], render_robots_txt(r["host"], r["respect_disallow"], r["crawl_delay"], hid))
-        for hid, r in enumerate(gen_robots_rows(seed, n_hosts))
-    ]
-    return spark.createDataFrame(rows, "host string, body string")
+    lrl-crawler.py:173-182). Generated over ``spark.range`` like the
+    other fixture tables, so two engines in one session build equal plans
+    and the second one's robots cache is a CacheManager hit, not a
+    re-parse."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for b in batches:
+            rows = [(int(h), robots_row(int(h))) for h in b["id"]]
+            yield pd.DataFrame(
+                {
+                    "host": [r["host"] for _, r in rows],
+                    "body": [
+                        render_robots_txt(r["host"], r["respect_disallow"], r["crawl_delay"], h)
+                        for h, r in rows
+                    ],
+                },
+                columns=["host", "body"],
+            )
+
+    return spark.range(n_hosts, numPartitions=_gen_parts(spark, n_hosts, 4000)).mapInPandas(
+        gen, "host string, body string"
+    )

@@ -12,8 +12,9 @@ One round =
   4. caption relevance scoring (broadcast lexicon, pandas UDF)
   5. assign the round's canonical fetch order
      (priority DESC, url_hash ASC — total and partition-invariant)
-  6. discover outlinks -> canonicalize -> exclusion filter -> batch dedup
-     -> seen-set anti-join -> append to frontier; add to seen set
+  6. discover outlinks -> exclusion filter -> canonicalize (one Arrow
+     pass over the discovered rows) -> batch dedup -> seen-filter probe +
+     one seen-set anti-join -> append to frontier; add to seen set
   7. checkpoint: ledger/frontier parquet snapshots, a snapshot of the live
      seen filter tagged with the ``url_seen`` version it covers, then the
      metrics JSON with per-partition lineage (north rule resumability);
@@ -34,6 +35,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -164,15 +166,18 @@ class CrawlEngine:
 
     def _resolve_discoveries(self, disc: DataFrame) -> DataFrame:
         """(url_id, depth, relevance) -> full frontier rows: join the link
-        graph for the raw URL, canonicalize, guard, exclusion-filter,
+        graph for the raw URL, exclusion-filter, canonicalize, guard,
         batch-dedup. Dedup keeps (min depth, max relevance, min url_id) per
-        url_hash — a total order, so partition-invariant."""
+        url_hash — a total order, so partition-invariant. The keys pass
+        (``with_url_keys``) runs above the join, once per discovered row
+        that survives the JVM-side exclusion filter; the link graph itself
+        never goes through Python."""
         links = self.links.select("url_id", "url", "robots_disallow")
         d = disc.join(links, "url_id")
-        d = with_url_keys(d)  # url_canon, host, domain, url_hash, md5_hash
-        d = d.filter(F.col("url_canon").isNotNull())  # relative-URL guard (F3)
         excl = F.array(*[F.lit(s) for s in fx.EXCLUDED_SUBSTRINGS])
         d = d.filter(~F.exists(excl, lambda s: F.col("url").contains(s)))  # F2 substring
+        d = with_url_keys(d)  # url_canon, host, domain, url_hash, md5_hash
+        d = d.filter(F.col("url_canon").isNotNull())  # relative-URL guard (F3)
         w = Window.partitionBy("url_hash").orderBy(
             F.asc("depth"), F.desc("relevance"), F.asc("url_id")
         )
@@ -192,7 +197,12 @@ class CrawlEngine:
             for page in range(c.num_search_pages):
                 for uid in fx.search_result_ids(c.seed, qid, page, c.n_urls):
                     rows.append((uid, 0, 0.0))
-        disc = self.spark.createDataFrame(rows, DISCOVERY_SCHEMA)
+        # from pandas, so the rows reach the JVM as Arrow batches: a frame
+        # parallelized from a Python list is a Python RDD, whose runner
+        # chains into the keys pass's Python runner inside every task
+        disc = self.spark.createDataFrame(
+            pd.DataFrame(rows, columns=["url_id", "depth", "relevance"]), DISCOVERY_SCHEMA
+        )
         # barrier, taken before seen.add changes the set (see run_round)
         fresh = self.seen.filter_unseen(self._resolve_discoveries(disc)).localCheckpoint()
         self._seen_total += self.seen.add(fresh.select("url_hash"), assume_new=True)
@@ -450,14 +460,21 @@ class CrawlEngine:
         if self.filter_restore and not self.metrics:  # first round after resume
             m["filter_restore"] = self.filter_restore
         self.metrics.append(m)
-        with open(os.path.join(self.dir, f"metrics_round{r}.json"), "w") as f:
-            json.dump(m, f, indent=1)
+        self._write_marker(r, m)
         # only now, with the marker naming the new snapshot on disk, may the
         # snapshots of earlier rounds go
         snap_dir = os.path.join(self.dir, "seen_filter")
         for n in os.listdir(snap_dir):
             if os.path.join("seen_filter", n) != snapshot:
                 os.remove(os.path.join(snap_dir, n))
+
+    def _write_marker(self, r: int, m: dict) -> None:
+        """Write round ``r``'s commit marker ``metrics_round{r}.json``
+        (temp file + rename, so a reader never sees a partial marker)."""
+        path = os.path.join(self.dir, f"metrics_round{r}.json")
+        with open(path + ".tmp", "w") as f:
+            json.dump(m, f, indent=1)
+        os.replace(path + ".tmp", path)
 
     def _save_filter_snapshot(self, r: int) -> str:
         """Snapshot the live seen filter as committed round ``r``'s; returns
@@ -480,12 +497,18 @@ class CrawlEngine:
 
         The expiry rewrites ``url_seen``, so the last committed round's
         filter snapshot no longer covers it; it is written again (same
-        file, temp + rename). A crash between the rewrite and that write
-        leaves a snapshot whose version differs, which resume rebuilds."""
+        file, temp + rename), and then that round's marker is rewritten
+        with the lowered ``seen_total``, which resume reads. A crash
+        between the rewrite and the snapshot write leaves a snapshot whose
+        version differs, which resume rebuilds."""
         removed = self.seen.expire(rows.select("url_hash"))
         self._seen_total -= removed
         if removed and self.round > 0:
-            self._save_filter_snapshot(self.round - 1)
+            r = self.round - 1
+            self._save_filter_snapshot(r)
+            with open(os.path.join(self.dir, f"metrics_round{r}.json")) as f:
+                m = json.load(f)
+            self._write_marker(r, {**m, "seen_total": self._seen_total})
         return removed
 
     # -- resume ---------------------------------------------------------------------
@@ -504,7 +527,7 @@ class CrawlEngine:
         rounds = sorted(
             int(n.split("metrics_round")[1].split(".")[0])
             for n in os.listdir(checkpoint_dir)
-            if n.startswith("metrics_round")
+            if n.startswith("metrics_round") and n.endswith(".json")
         )
         if not rounds:
             raise ValueError(f"no checkpoints in {checkpoint_dir}")
