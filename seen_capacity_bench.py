@@ -7,10 +7,8 @@ shard merge), then measures what the 10^10-capacity claims extrapolate
 from: build wall time, filter bytes (total / per shard), broadcast wall
 time, the write and load time and file size of the filter snapshot a
 crawl commits every round (``save_filter`` / ``load_filter``, what
-``SeenSet.save_snapshot`` and ``restore`` run), single-core numpy probe
-throughput + observed false-positive rate, and end-to-end distributed
-probe throughput through ``SeenSet.filter_unseen``'s own probe pass
-(``mapInArrow`` over the broadcast filter).
+``SeenSet.save_snapshot`` and ``restore`` run), and single-core numpy
+probe throughput + observed false-positive rate.
 
 Prints ONE JSON line. Run: ``python seen_capacity_bench.py`` (env:
 SEEN_BENCH_KEYS to override the key count).
@@ -36,7 +34,6 @@ from webcrawl_lowres_lang_spark.operators.bloom import (  # noqa: E402
     load_filter,
     save_filter,
 )
-from webcrawl_lowres_lang_spark.operators.seen import SeenSet  # noqa: E402
 from webcrawl_lowres_lang_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 
@@ -64,6 +61,7 @@ def main() -> None:
     t0 = time.perf_counter()
     bc = spark.sparkContext.broadcast(bloom)
     broadcast_secs = time.perf_counter() - t0
+    bc.destroy()
 
     snap_dir = tempfile.mkdtemp(prefix="seen_snapshot_")
     snap = os.path.join(snap_dir, "filter.npz")
@@ -99,17 +97,6 @@ def main() -> None:
     assert bool(hit_present.all()), "Bloom false negative — impossible"
     observed_fpp = float(hit_absent.mean())
 
-    # distributed probe: filter_unseen's probe pass over the broadcast
-    # filter (it never reads the set's table, so the path need not exist)
-    seen = SeenSet(spark, os.path.join(snap_dir, "url_seen"), bloom_config=cfg)
-    seen._bloom_bc = bc
-    probe_df = spark.range(0, 2 * n_probe, numPartitions=DEFAULT_CPUS).select(
-        F.xxhash64((F.col("id") + F.lit(n_keys - n_probe))).alias("url_hash")
-    )
-    t0 = time.perf_counter()
-    hits = seen._with_maybe_seen(probe_df).filter("__maybe_seen").count()
-    dist_secs = time.perf_counter() - t0
-
     print(
         json.dumps(
             {
@@ -127,8 +114,6 @@ def main() -> None:
                 "snapshot_bytes": snapshot_bytes,
                 "numpy_probe_mkeys_per_sec": round(2 * n_probe / probe_secs / 1e6, 1),
                 "observed_fpp": round(observed_fpp, 5),
-                "distributed_probe_mkeys_per_sec": round(2 * n_probe / dist_secs / 1e6, 1),
-                "distributed_probe_hits": hits,
             }
         ),
         flush=True,

@@ -324,7 +324,9 @@ def test_ttl_expire_recrawl_cuckoo(spark, tmp_path):
         "url_id", F.col("depth"), F.lit(0.0).alias("relevance")
     )
     resolved = eng._resolve_discoveries(disc)
-    fresh = eng.seen.filter_unseen(resolved)
+    # materialized before seen.add, as run_round's "fresh" barrier is: the
+    # lazy anti-join re-run after the append would find every row seen
+    fresh = eng.seen.filter_unseen(resolved).localCheckpoint()
     refetch_hashes = {r["url_hash"] for r in fresh.select("url_hash").collect()}
     assert refetch_hashes == expired_hashes  # re-admitted, nothing else
 
@@ -352,7 +354,7 @@ def test_ttl_expire_recrawl_cuckoo(spark, tmp_path):
     assert still_seen.count() == 0
 
 
-def test_ttl_expire_bloom_requires_rebuild(spark, tmp_path):
+def test_ttl_expire_bloom_requires_rebuild(spark, tmp_path, monkeypatch):
     """The Bloom path supports expire too, but by REBUILDING the filter
     from the rewritten exact table (bits cannot be cleared) — the
     documented cost the cuckoo path avoids."""
@@ -381,6 +383,19 @@ def test_ttl_expire_bloom_requires_rebuild(spark, tmp_path):
     # seen_total, so the resumed count is the table's
     res = CrawlEngine.resume(spark, str(tmp_path / "ck"))
     assert res.filter_restore == "snapshot"
+    assert res._seen_total == eng._seen_total == res.seen.count()
+    # a crash after the marker rewrite but before the snapshot write: the
+    # stale snapshot is rebuilt, and the count is still the table's
+    more = led.filter(~F.col("url_hash").isin(list(hashes))).select("url_hash").limit(1)
+
+    def crash(r):
+        raise RuntimeError("crash before the snapshot write")
+
+    monkeypatch.setattr(eng, "_save_filter_snapshot", crash)
+    with pytest.raises(RuntimeError):
+        eng.expire_urls(more)
+    res = CrawlEngine.resume(spark, str(tmp_path / "ck"))
+    assert res.filter_restore == "rebuild: version differs"
     assert res._seen_total == eng._seen_total == res.seen.count()
 
 

@@ -193,9 +193,9 @@ def _optimized(df):
 
 def test_discovery_keys_run_above_the_link_join(spark, tmp_path):
     """The round's discovery frame (``_resolve_discoveries`` then
-    ``filter_unseen``) runs Python exactly twice per discovered row: the
-    keys pass and the filter probe. Nothing under the join with the link
-    graph runs Python, so the canonicalizer never sees the whole graph."""
+    ``filter_unseen``) runs Python exactly once per discovered row: the
+    keys pass. Nothing under the join with the link graph runs Python, so
+    the canonicalizer never sees the whole graph."""
     from webcrawl_lowres_lang_spark.streaming.crawler import (
         DISCOVERY_SCHEMA,
         CrawlConfig,
@@ -213,13 +213,14 @@ def test_discovery_keys_run_above_the_link_join(spark, tmp_path):
     for join in link_joins:
         assert _python_nodes(join) == [], plan.toString()
     assert len(link_joins) == 1, plan.toString()  # one lineage, no union branches
-    assert _python_nodes(plan) == ["MapInArrow", "MapInArrow"], plan.toString()
+    assert _python_nodes(plan) == ["MapInArrow"], plan.toString()
 
 
-def test_seen_probe_stays_on_candidates(spark, tmp_path):
+def test_filter_unseen_is_one_exact_anti_join(spark, tmp_path):
     """``filter_unseen`` with a live filter is one left-anti join (no
-    union of a fast and a verified branch) whose table side runs no
-    Python: the probe is never copied onto the ``url_seen`` scan."""
+    union of a fast and a verified branch) and runs no Python on either
+    side: nothing probes the filter, on the candidates or on the
+    ``url_seen`` scan."""
     from webcrawl_lowres_lang_spark.operators.bloom import BloomConfig
     from webcrawl_lowres_lang_spark.operators.seen import SeenSet
 
@@ -232,8 +233,7 @@ def test_seen_probe_stays_on_candidates(spark, tmp_path):
     plan = _optimized(fresh)
     (anti,) = _joins(plan, "LeftAnti")
     assert not [n for n in _nodes(plan) if n.nodeName() == "Union"], plan.toString()
-    assert _python_nodes(anti.children().apply(0)) == ["MapInArrow"], plan.toString()
-    assert _python_nodes(anti.children().apply(1)) == [], plan.toString()
+    assert _python_nodes(plan) == [], plan.toString()
     assert sorted(r["url_hash"] for r in fresh.collect()) == list(range(100, 150))
 
 

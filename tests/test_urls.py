@@ -136,9 +136,9 @@ _URL = st.builds(
     st.from_regex(r"(/[a-zA-Z0-9._~-]{0,6}){0,3}", fullmatch=True),
     st.from_regex(r"(\?[a-z0-9=&]{0,8})?", fullmatch=True),
 )
-# userinfo, ports and IPv4 in every corpus, whatever hypothesis draws
+# userinfo, ports, IPv4 and IPv6 in every corpus, whatever hypothesis draws
 _FIXED = ["http://u:pw@10.0.0.1:8080/x", "https://user@Example.COM:443/a/../b?y=1&x=2",
-          "http://a.b.c.example.co.nz:81", "http://192.168.0.1/"]
+          "http://a.b.c.example.co.nz:81", "http://192.168.0.1/", "http://[::1]:8080/v6"]
 
 
 @settings(max_examples=5, deadline=None,

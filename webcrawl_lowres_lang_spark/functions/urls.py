@@ -162,10 +162,12 @@ def _host_of_canon(canon: str | None) -> str | None:
     (the sequential oracle's rule, tests/reference_oracle.py). It equals
     Spark's ``parse_url(url_canon, 'HOST')`` wherever Java's URI parser
     accepts the host. ``canonicalize_one`` always writes a path, so the
-    authority ends at the first '/' after the scheme."""
+    authority ends at the first '/' after the scheme. An IPv6 host loses
+    its brackets in canonicalization, so the rule yields an empty string;
+    that becomes NULL, as ``parse_url`` gives for such a URL."""
     if canon is None:
         return None
-    return canon.split("://", 1)[1].split("/", 1)[0].split("@")[-1].split(":")[0]
+    return canon.split("://", 1)[1].split("/", 1)[0].split("@")[-1].split(":")[0] or None
 
 
 _KEY_COLS = ("url_canon", "host", "domain")

@@ -1,28 +1,25 @@
-"""URL-seen set: exact hash-bucketed Parquet table + partitioned-Bloom
-fast path (SURVEY.md J5/E4; reference semantics: dedup-on-insert at
-``sql.py:147-159, 180-189, 213-246``).
+"""URL-seen set: exact hash-bucketed Parquet table + partitioned Bloom
+(or cuckoo) filter kept beside it (SURVEY.md J5/E4; reference semantics:
+dedup-on-insert at ``sql.py:147-159, 180-189, 213-246``).
 
-Correctness comes ONLY from the exact table (the filter has no false
-negatives, so a filter-negative is *definitely unseen*). ``filter_unseen``
-probes the live filter once per candidate, in one ``mapInArrow`` pass
-that appends ``__maybe_seen``, and then runs ONE left-anti join against
-the exact table whose condition includes that flag: a filter-negative
-row never matches, so it passes without verification. (A union of a
-fast and a verified branch would plan the candidate lineage twice.) The
-pass is opaque to Catalyst, so the probe stays on the candidates; a
-pandas-UDF filter on ``url_hash`` would be copied onto the table scan,
-because the equal join keys let constraint propagation infer it there.
-Before the first append there is no table, and the candidates come back
-untouched. The exact table is partitioned by
-``bucket = pmod(url_hash, n_buckets)``, but the join does not prune by
-it: the plan Spark picks is ``BroadcastHashJoin LeftAnti, BuildRight``
-with the WHOLE exact table as the broadcast build side (while it fits
-under the broadcast threshold set in ``session.py``), read by a scan whose
-only partition filter is ``isnotnull(bucket)``, and every candidate
-probes the hash table (the ``__maybe_seen`` flag only gates the match).
-Past the threshold the join becomes a sort-merge join that shuffles the
-whole table. So the per-round verification cost grows with the table,
-not the suspects.
+Correctness comes ONLY from the exact table. ``filter_unseen`` is one
+left-anti join of the candidates against it and does not read the live
+filter: a hash anti-join already costs one key lookup per candidate, and
+a filter flag in the join condition would be checked only after a lookup
+matched, so it could neither change the result nor skip a lookup. For
+the filter to save work it must split the candidates before the join
+(materialize the probed candidates, anti-join only the positives); that
+belongs with the suspects-only probe side of ROADMAP item 2. Before the
+first append there is no table, and the candidates come back untouched.
+The exact table is partitioned by ``bucket = pmod(url_hash, n_buckets)``,
+but the join does not prune by it: the plan Spark picks is
+``BroadcastHashJoin LeftAnti, BuildRight`` with the WHOLE exact table as
+the broadcast build side (while it fits under the broadcast threshold set
+in ``session.py``), read by a scan whose only partition filter is
+``isnotnull(bucket)``, and every candidate probes the hash table. Past
+the threshold the join becomes a sort-merge join that shuffles the whole
+table. So the per-round verification cost grows with the table, not the
+suspects.
 
 The live filter is also committed state: ``save_snapshot`` writes it with
 the ``url_seen`` version it covers (``tablestore.table_version``) at each
@@ -36,9 +33,8 @@ shard — still broadcastable onto large-memory executors. Past
 broadcast-friendly sizes, repartition the probe side by the filter's own
 ``shard_of`` so each executor task probes only the shards its partition
 maps to (shard-aligned pruning: per-task filter footprint drops to
-total/num_shards), or drop the Bloom fast path entirely — the bucketed
-exact anti-join alone still gives correct dedup, just without the probe
-shrink.
+total/num_shards), or drop the filter entirely — the bucketed exact
+anti-join alone gives correct dedup, just without the probe shrink.
 """
 
 from __future__ import annotations
@@ -47,10 +43,9 @@ import os
 import zipfile
 
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, LongType, StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from ..sources.tablestore import (
     append_table,
@@ -76,7 +71,7 @@ SEEN_SCHEMA = StructType([
 
 
 class SeenSet:
-    """Persistent exact seen-set with an optional in-memory Bloom fast path.
+    """Persistent exact seen-set with an in-memory Bloom or cuckoo filter.
 
     Storage is an append-only bucket-partitioned table behind the
     sources/tablestore.py Iceberg seam (bucket partitioning ≅ Iceberg's
@@ -109,7 +104,6 @@ class SeenSet:
                 capacity=bloom_config.capacity, num_shards=bloom_config.num_shards
             )
         self._bloom: ShardedFilter | None = None
-        self._bloom_bc = None
         # optional phase callback (CrawlEngine wires its _label here) so
         # driver-side time inside add() is attributable in profiles
         self._phase_cb = None
@@ -136,50 +130,18 @@ class SeenSet:
 
     # -- core operator: filter-unseen ----------------------------------------
 
-    def filter_unseen(self, candidates: DataFrame, use_bloom: bool = True) -> DataFrame:
+    def filter_unseen(self, candidates: DataFrame) -> DataFrame:
         """Rows of ``candidates`` whose ``url_hash`` is not in the set.
 
         Plan shape: with no ``url_seen`` table yet, the candidates come
-        back untouched (no join). Otherwise one ``mapInArrow`` pass probes
-        the live filter and appends ``__maybe_seen`` to each candidate,
-        then ONE left-anti join against the exact table on (bucket,
-        url_hash) whose condition also requires ``__maybe_seen``: a
-        filter-negative row can never match, so it survives the join
-        unverified. The probe is opaque to Catalyst, so it is never copied
-        onto the table scan. Without a loaded filter (or with
-        ``use_bloom=False``) it is the plain exact anti-join.
+        back untouched (no join). Otherwise ONE left-anti join against the
+        exact table on (bucket, url_hash); no Python runs in it.
         """
         if not self._exists():
             return candidates
-        seen = self.load().select(
-            F.col("bucket").alias("__seen_bucket"), F.col("url_hash").alias("__seen_hash")
-        )
-        cands = self._with_bucket(candidates)
-        match = (F.col("bucket") == F.col("__seen_bucket")) & (
-            F.col("url_hash") == F.col("__seen_hash")
-        )
-        if use_bloom and self._bloom_bc is not None:
-            cands = self._with_maybe_seen(cands)
-            match = F.col("__maybe_seen") & match
-        return cands.join(seen, match, "left_anti").drop("bucket", "__maybe_seen")
-
-    def _with_maybe_seen(self, df: DataFrame) -> DataFrame:
-        """Append ``__maybe_seen``: the live filter's answer for each row's
-        ``url_hash`` (one ``mapInArrow`` pass, the broadcast filter read once
-        per Python worker)."""
-        bc = self._bloom_bc
-
-        def probe(batches):
-            flt = bc.value  # the live ShardedFilter
-            for b in batches:
-                keys = b.column("url_hash").to_numpy()
-                yield pa.RecordBatch.from_arrays(
-                    b.columns + [pa.array(flt.might_contain(keys))],
-                    names=b.schema.names + ["__maybe_seen"],
-                )
-
-        schema = StructType(df.schema.fields + [StructField("__maybe_seen", BooleanType(), False)])
-        return df.mapInArrow(probe, schema)
+        return self._with_bucket(candidates).join(
+            self.load().select("bucket", "url_hash"), ["bucket", "url_hash"], "left_anti"
+        ).drop("bucket")
 
     # -- mutation -------------------------------------------------------------
 
@@ -209,9 +171,7 @@ class SeenSet:
         over ``max(1, n // 250k)`` coalesced partitions: each treeAggregate
         task ships a whole partial filter (~1.2 MB at 1M capacity), so at
         small delta sizes task count — not key count — is the cost
-        (measured 1.77s -> 0.47s for a 5k-key delta). The superseded
-        broadcast is unpersisted so long crawls don't accumulate one full
-        Bloom snapshot per round on the executors.
+        (measured 1.77s -> 0.47s for a 5k-key delta).
         """
         new = df.select("url_hash") if assume_new else df.select("url_hash").distinct()
         new = self._with_bucket(new)
@@ -249,7 +209,6 @@ class SeenSet:
             )
             self._phase("seen:merge")
             self._bloom.merge(delta)
-            self._rebroadcast()
         self._phase("seen:done")
         out.unpersist()
         return n
@@ -278,10 +237,10 @@ class SeenSet:
         above ``distributed_threshold`` keys — a whole-large-host
         retraction can be millions — never materialize the key list on
         the driver: the delete set stays distributed, grouped by filter
-        shard, and each executor task deep-copies its shard from the live
-        broadcast, drops that group's fingerprints, and ships back the
-        UPDATED SHARD (driver traffic bounded by filter size, not delete
-        count). The table rewrite itself stays distributed in both modes.
+        shard, and each executor task deep-copies its shard from a
+        broadcast of the live filter, drops that group's fingerprints, and
+        ships back the UPDATED SHARD (driver traffic bounded by filter
+        size, not delete count). The table rewrite itself stays distributed in both modes.
         """
         present = (
             self._with_bucket(keys.select("url_hash").distinct())
@@ -303,7 +262,6 @@ class SeenSet:
                     self._bloom.delete_many(np.array(hashes, dtype=np.int64))
                 else:
                     self._distributed_cuckoo_delete(present)
-                self._rebroadcast()
             else:
                 self.build_bloom()
         present.unpersist()
@@ -313,8 +271,8 @@ class SeenSet:
         """Shard-parallel fingerprint deletion: group verified-present
         keys by filter shard (same ``shard_of`` as the filter itself, run
         in a vectorized pandas UDF so the sharding function can never
-        drift), deep-copy each touched shard from the live broadcast on
-        an executor, delete that group's fingerprints there, and swap the
+        drift), deep-copy each touched shard from a broadcast of the live
+        filter on an executor, delete that group's fingerprints there, and swap the
         returned shard blobs into the driver-side filter. No key list ever
         materializes on the driver."""
         import copy
@@ -322,7 +280,7 @@ class SeenSet:
 
         import numpy as np
 
-        bc = self._bloom_bc
+        bc = self.spark.sparkContext.broadcast(self._bloom)
         num_shards = self._bloom.config.num_shards
 
         @F.pandas_udf("int")
@@ -340,23 +298,21 @@ class SeenSet:
             local.delete_many(pdf["url_hash"].to_numpy(dtype=np.int64))
             return pd.DataFrame({"sid": [sid], "blob": [pickle.dumps(local)]})
 
-        rows = (
-            present.select("url_hash")
-            .withColumn("shard", shard_col(F.col("url_hash")))
-            .groupBy("shard")
-            .applyInPandas(drop_group, "sid int, blob binary")
-            .collect()
-        )
+        try:
+            rows = (
+                present.select("url_hash")
+                .withColumn("shard", shard_col(F.col("url_hash")))
+                .groupBy("shard")
+                .applyInPandas(drop_group, "sid int, blob binary")
+                .collect()
+            )
+        finally:
+            bc.destroy()
         for r in rows:
             if r["blob"]:
                 self._bloom.shards[r["sid"]] = pickle.loads(bytes(r["blob"]))
 
     # -- bloom lifecycle -------------------------------------------------------
-
-    def _rebroadcast(self) -> None:
-        if self._bloom_bc is not None:
-            self._bloom_bc.unpersist()
-        self._bloom_bc = self.spark.sparkContext.broadcast(self._bloom)
 
     def build_bloom(self, depth: int = 2):
         """(Re)build the partitioned filter (Bloom or cuckoo, per
@@ -365,13 +321,11 @@ class SeenSet:
         self._bloom = build_filter_from_df(
             self.load(), "url_hash", self.filter_config, depth=depth
         )
-        self._rebroadcast()
         return self._bloom
 
     def enable_empty_bloom(self) -> None:
         """Start a fresh crawl with an empty live filter (everything unseen)."""
         self._bloom = self.filter_config.empty()
-        self._rebroadcast()
 
     # -- filter snapshot ---------------------------------------------------------
 
@@ -403,7 +357,6 @@ class SeenSet:
             except (OSError, EOFError, KeyError, zipfile.BadZipFile) as e:  # not a snapshot
                 reason = f"snapshot unreadable: {type(e).__name__}: {e}"
             else:
-                self._rebroadcast()
                 return "snapshot"
         self.build_bloom()
         return f"rebuild: {reason}"

@@ -13,8 +13,8 @@ One round =
   5. assign the round's canonical fetch order
      (priority DESC, url_hash ASC — total and partition-invariant)
   6. discover outlinks -> exclusion filter -> canonicalize (one Arrow
-     pass over the discovered rows) -> batch dedup -> seen-filter probe +
-     one seen-set anti-join -> append to frontier; add to seen set
+     pass over the discovered rows) -> batch dedup -> one exact seen-set
+     anti-join -> append to frontier; add to seen set (and its filter)
   7. checkpoint: ledger/frontier parquet snapshots, a snapshot of the live
      seen filter tagged with the ``url_seen`` version it covers, then the
      metrics JSON with per-partition lineage (north rule resumability);
@@ -80,7 +80,8 @@ class CrawlConfig:
     cossim_threshold: float = 0.5
     # phash near-duplicate suppression distance (north rule)
     near_dup_max_hamming: int = 4
-    # URL-seen pre-filter: "bloom" or "cuckoo" (north rule names both;
+    # URL-seen filter kept beside the exact table: "bloom" or "cuckoo"
+    # (north rule names both;
     # results identical — exactness is owned by the backing table —
     # cuckoo additionally supports O(1) deletion for TTL re-crawl)
     seen_filter: str = "bloom"
@@ -290,10 +291,10 @@ class CrawlEngine:
 
         self._label(f"r{self.round}:discover")
         disc = self._discover_outlinks(ledger)
-        # barrier "fresh": materialized BEFORE seen.add appends these hashes
-        # and rebroadcasts the filter; a lazy re-run of the probe after the
-        # append would test the round's new URLs against a set that now
-        # holds them. The append and the next frontier read this copy.
+        # barrier "fresh": materialized BEFORE seen.add appends these hashes;
+        # a lazy re-run of the anti-join after the append would test the
+        # round's new URLs against a set that now holds them. The append
+        # and the next frontier read this copy.
         fresh = self.seen.filter_unseen(self._resolve_discoveries(disc)).localCheckpoint()
         self._label(f"r{self.round}:seen-add")
         self._seen_total += self.seen.add(fresh.select("url_hash"), assume_new=True)
@@ -496,19 +497,22 @@ class CrawlEngine:
         (sql.py:312-334) that re-queue already-handled URLs.
 
         The expiry rewrites ``url_seen``, so the last committed round's
-        filter snapshot no longer covers it; it is written again (same
-        file, temp + rename), and then that round's marker is rewritten
-        with the lowered ``seen_total``, which resume reads. A crash
-        between the rewrite and the snapshot write leaves a snapshot whose
-        version differs, which resume rebuilds."""
+        marker is rewritten with the lowered ``seen_total``, which resume
+        reads, and then that round's filter snapshot, which no longer
+        covers the table, is written again (same file; both temp +
+        rename). A crash between the two leaves a snapshot whose version
+        differs, which resume rebuilds, beside the right count. A crash
+        between the table rewrite and the marker leaves the old count,
+        as a crash between ``seen.add`` and a round's marker does
+        (ROADMAP item 1)."""
         removed = self.seen.expire(rows.select("url_hash"))
         self._seen_total -= removed
         if removed and self.round > 0:
             r = self.round - 1
-            self._save_filter_snapshot(r)
             with open(os.path.join(self.dir, f"metrics_round{r}.json")) as f:
                 m = json.load(f)
             self._write_marker(r, {**m, "seen_total": self._seen_total})
+            self._save_filter_snapshot(r)
         return removed
 
     # -- resume ---------------------------------------------------------------------
