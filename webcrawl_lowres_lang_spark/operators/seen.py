@@ -240,7 +240,8 @@ class SeenSet:
         shard, and each executor task deep-copies its shard from a
         broadcast of the live filter, drops that group's fingerprints, and
         ships back the UPDATED SHARD (driver traffic bounded by filter
-        size, not delete count). The table rewrite itself stays distributed in both modes.
+        size, not delete count). The table rewrite itself stays
+        distributed in both modes.
         """
         present = (
             self._with_bucket(keys.select("url_hash").distinct())
@@ -272,9 +273,9 @@ class SeenSet:
         keys by filter shard (same ``shard_of`` as the filter itself, run
         in a vectorized pandas UDF so the sharding function can never
         drift), deep-copy each touched shard from a broadcast of the live
-        filter on an executor, delete that group's fingerprints there, and swap the
-        returned shard blobs into the driver-side filter. No key list ever
-        materializes on the driver."""
+        filter on an executor, delete that group's fingerprints there, and
+        swap the returned shard blobs into the driver-side filter. No key
+        list ever materializes on the driver."""
         import copy
         import pickle
 

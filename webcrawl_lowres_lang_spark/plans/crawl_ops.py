@@ -40,9 +40,9 @@ _CANON_URL_SQL = "'http://' || lower(source) || '.example.com/a/doc/' || doc_id:
     survey_ref="C1,C3,F3,U7",
 )
 def c1_c3_url_canonicalize_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The REAL canonicalizer (with_url_keys' Arrow pass) runs on the Spark side; the oracle
-    # states the expected canonical form via independent string ops —
-    # a cross-check, not a mirror of the same code.
+    # The REAL canonicalizer (with_url_keys' Arrow pass) runs on the Spark
+    # side; the oracle states the expected canonical form via independent
+    # string ops — a cross-check, not a mirror of the same code.
     from ..functions.urls import with_url_keys
 
     d = load(spark, sf_dir, "documents").select(

@@ -81,9 +81,9 @@ class CrawlConfig:
     # phash near-duplicate suppression distance (north rule)
     near_dup_max_hamming: int = 4
     # URL-seen filter kept beside the exact table: "bloom" or "cuckoo"
-    # (north rule names both;
-    # results identical — exactness is owned by the backing table —
-    # cuckoo additionally supports O(1) deletion for TTL re-crawl)
+    # (north rule names both; results identical — exactness is owned by
+    # the backing table — cuckoo additionally supports O(1) deletion for
+    # TTL re-crawl)
     seen_filter: str = "bloom"
 
 
