@@ -10,24 +10,16 @@ via spark-submit --py-files on multi-executor clusters").
 from __future__ import annotations
 
 import os
-import zipfile
+
+from webcrawl_lowres_lang_spark.session import write_package_zip
 
 ROOT = os.path.dirname(os.path.abspath(__file__))
-PKG = "webcrawl_lowres_lang_spark"
 
 
 def main() -> str:
     out_dir = os.path.join(ROOT, "dist")
     os.makedirs(out_dir, exist_ok=True)
-    out = os.path.join(out_dir, f"{PKG}.zip")
-    with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
-        for dirpath, _, files in os.walk(os.path.join(ROOT, PKG)):
-            if "__pycache__" in dirpath:
-                continue
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(dirpath, f)
-                    z.write(full, os.path.relpath(full, ROOT))
+    out = write_package_zip(os.path.join(out_dir, "webcrawl_lowres_lang_spark.zip"))
     print(out)
     return out
 

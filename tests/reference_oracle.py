@@ -97,7 +97,11 @@ class OracleCrawl:
             canon = canonicalize_one(url)
             if canon is None:
                 continue
-            host = canon.split("://", 1)[1].split("/", 1)[0].split("@")[-1].split(":")[0]
+            authority = canon.split("://", 1)[1].split("/", 1)[0].split("@")[-1]
+            if authority.startswith("["):  # IPv6 literal: host keeps its brackets
+                host = authority[: authority.index("]") + 1]
+            else:
+                host = authority.split(":")[0]
             row = {
                 "url_id": uid,
                 "url": url,

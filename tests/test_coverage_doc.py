@@ -8,11 +8,7 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
-from webcrawl_lowres_lang_spark.plans import (  # noqa: F401  (populate REGISTRY)
-    crawl_ops,
-    pipeline_ops,
-    relational,
-)
+from webcrawl_lowres_lang_spark.plans import crawl_ops, relational  # noqa: F401  (populate REGISTRY)
 from webcrawl_lowres_lang_spark.plans.registry import REGISTRY
 
 # A token is a "query citation" when it follows the registry's naming
@@ -65,8 +61,9 @@ _SURVEY_CORE = [
 
 
 def test_survey_core_inside_driver_correctness_window():
-    # the registry is per process and this module imports pipeline_ops, so
-    # ask a fresh `import __spark_entry__` — exactly what the driver sees
+    # the registry is per process and any test module may import more plan
+    # modules, so ask a fresh `import __spark_entry__` — exactly what the
+    # driver sees
     import json
     import subprocess
     import sys

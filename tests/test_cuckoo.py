@@ -4,7 +4,7 @@
 - DELETION: the capability Bloom lacks — deletes are exact for inserted
   keys and never disturb other keys
 - treeAggregate build == local build; merge keeps all keys
-- SeenSet(filter_kind="cuckoo") produces the same unseen sets as bloom
+- SeenSet(filter_config=CuckooConfig(...)) produces the same unseen sets as bloom
 """
 
 from __future__ import annotations
@@ -108,20 +108,17 @@ def test_merge_keeps_all_keys():
 
 
 def test_seen_set_cuckoo_matches_bloom(spark, tmp_path):
-    """SeenSet with filter_kind='cuckoo' yields identical unseen sets —
+    """SeenSet with a CuckooConfig yields identical unseen sets —
     the filter choice is a pure pre-filter swap behind the exact table."""
     rows = [(int(k),) for k in range(0, 4_000, 3)]
     cand_rows = [(int(k),) for k in range(0, 6_000, 7)]
     out = {}
-    for kind in ("bloom", "cuckoo"):
-        s = SeenSet(
-            spark,
-            str(tmp_path / f"seen_{kind}"),
-            n_buckets=8,
-            bloom_config=BloomConfig(capacity=50_000, fpp=0.01, num_shards=8),
-            filter_kind=kind,
-            cuckoo_config=CuckooConfig(capacity=50_000, num_shards=8),
-        )
+    configs = {
+        "bloom": BloomConfig(capacity=50_000, fpp=0.01, num_shards=8),
+        "cuckoo": CuckooConfig(capacity=50_000, num_shards=8),
+    }
+    for kind, config in configs.items():
+        s = SeenSet(spark, str(tmp_path / f"seen_{kind}"), n_buckets=8, filter_config=config)
         s.enable_empty_bloom()
         s.add(spark.createDataFrame(rows, ["url_hash"]))
         cands = spark.createDataFrame(cand_rows, ["url_hash"])

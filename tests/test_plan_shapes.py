@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from webcrawl_lowres_lang_spark.plans import crawl_ops, pipeline_ops, relational  # noqa: F401
+from webcrawl_lowres_lang_spark.plans import crawl_ops, relational  # noqa: F401
 from webcrawl_lowres_lang_spark.plans.registry import REGISTRY
 
 SF = "/root/testdata/sf0.01"
@@ -225,7 +225,7 @@ def test_filter_unseen_is_one_exact_anti_join(spark, tmp_path):
     from webcrawl_lowres_lang_spark.operators.seen import SeenSet
 
     seen = SeenSet(spark, str(tmp_path / "seen"), n_buckets=8,
-                   bloom_config=BloomConfig(capacity=10_000, fpp=0.01, num_shards=8))
+                   filter_config=BloomConfig(capacity=10_000, fpp=0.01, num_shards=8))
     seen.enable_empty_bloom()
     seen.add(spark.range(100).withColumnRenamed("id", "url_hash"))
     cands = spark.range(50, 150).withColumnRenamed("id", "url_hash")

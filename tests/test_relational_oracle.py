@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from webcrawl_lowres_lang_spark.plans import crawl_ops, pipeline_ops, relational  # noqa: F401
+from webcrawl_lowres_lang_spark.plans import crawl_ops, relational  # noqa: F401
 
 from webcrawl_lowres_lang_spark.plans.registry import REGISTRY
 

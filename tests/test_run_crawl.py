@@ -46,6 +46,15 @@ def test_cli_run_and_resume(spark, tmp_path, capsys):
     assert s2["urls_seen"] >= summary["urls_seen"]
 
 
+def test_unknown_seen_filter_is_an_error(spark, tmp_path):
+    """A misspelt --seen-filter fails before the engine writes anything,
+    instead of silently crawling with the Bloom filter."""
+    ck = tmp_path / "ck_bad_filter"
+    with pytest.raises(ValueError, match="seen_filter"):
+        main(["--checkpoint", str(ck), "--seen-filter", "cukoo"])
+    assert not ck.exists()
+
+
 def test_spark_submit_py_files(tmp_path):
     """The LITERAL north-rule deployment path: `spark-submit --py-files
     <zip>` with a driver script that imports the engine ONLY from the zip

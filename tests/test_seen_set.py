@@ -74,7 +74,7 @@ def test_bloom_sizing_at_design_scale():
 
 @pytest.fixture()
 def seen(spark, tmp_path):
-    return SeenSet(spark, str(tmp_path / "seen"), n_buckets=8, bloom_config=CFG)
+    return SeenSet(spark, str(tmp_path / "seen"), n_buckets=8, filter_config=CFG)
 
 
 def _hash_df(spark, values):
@@ -102,7 +102,7 @@ def test_filter_unseen_exact_path_matches_bloom_path(spark, seen):
     seen.enable_empty_bloom()
     seen.add(_hash_df(spark, range(0, 80, 2)))
     cands = _hash_df(spark, range(80))
-    no_filter = SeenSet(spark, seen.path, n_buckets=seen.n_buckets, bloom_config=CFG)
+    no_filter = SeenSet(spark, seen.path, n_buckets=seen.n_buckets, filter_config=CFG)
     assert no_filter._bloom is None
     with_bloom = sorted(r["url_hash"] for r in seen.filter_unseen(cands).collect())
     exact = sorted(r["url_hash"] for r in no_filter.filter_unseen(cands).collect())
@@ -115,7 +115,7 @@ def test_seen_set_order_insensitive(spark, tmp_path):
     finals = []
     # three representative permutations (all six would re-test the same path)
     for i, perm in enumerate([(0, 1, 2), (2, 1, 0), (1, 2, 0)]):
-        s = SeenSet(spark, str(tmp_path / f"seen{i}"), n_buckets=4, bloom_config=CFG)
+        s = SeenSet(spark, str(tmp_path / f"seen{i}"), n_buckets=4, filter_config=CFG)
         s.enable_empty_bloom()
         for j in perm:
             s.add(s.filter_unseen(_hash_df(spark, batches[j])))
@@ -128,69 +128,32 @@ def test_build_bloom_after_restart(spark, seen):
     seen.enable_empty_bloom()
     seen.add(_hash_df(spark, range(500)))
     # simulate restart: new SeenSet over same path, rebuild bloom from storage
-    s2 = SeenSet(spark, seen.path, n_buckets=8, bloom_config=CFG)
+    s2 = SeenSet(spark, seen.path, n_buckets=8, filter_config=CFG)
     bloom = s2.build_bloom()
     assert bloom.might_contain(np.arange(500, dtype=np.int64)).all()
     fresh = s2.filter_unseen(_hash_df(spark, range(450, 550)))
     assert sorted(r["url_hash"] for r in fresh.collect()) == list(range(500, 550))
 
 
-def _cuckoo_seen(spark, tmp_path, name, capacity=200_000):
+def test_expire_cuckoo_deletes_verified_keys_and_readmits(spark, tmp_path):
+    """Expiry removes only keys the table holds (absent keys in the batch
+    are not counted), keeps the no-false-negative guarantee on kept keys,
+    and re-admits every expired key."""
     from webcrawl_lowres_lang_spark.operators.cuckoo import CuckooConfig
 
-    return SeenSet(
-        spark, str(tmp_path / name), n_buckets=8, filter_kind="cuckoo",
-        cuckoo_config=CuckooConfig(capacity=capacity, num_shards=8),
-    )
-
-
-def test_expire_distributed_matches_collect_path(spark, tmp_path):
-    """The shard-parallel expiry path (large batches) must leave the live
-    cuckoo filter in the same observable state as the driver-collect path
-    on identical inputs — same removal count, same might_contain on kept
-    keys, same re-admission of expired keys."""
-    keys = list(range(1, 5001))
-    expired = list(range(1, 2001))
-    states = {}
-    for name, threshold in (("collect", 10**9), ("dist", 0)):
-        s = _cuckoo_seen(spark, tmp_path, name, capacity=20_000)
-        s.enable_empty_bloom()
-        s.add(_hash_df(spark, keys), assume_new=True)
-        removed = s.expire(_hash_df(spark, expired), distributed_threshold=threshold)
-        assert removed == len(expired)
-        probes = np.array(keys, dtype=np.int64)
-        states[name] = (s.count(), s._bloom.might_contain(probes).tolist())
-    assert states["collect"] == states["dist"]
-
-
-def test_expire_large_batch_distributed_no_driver_keys(spark, tmp_path, monkeypatch):
-    """Expiring >=100k keys takes the distributed path: the driver-side
-    PartitionedCuckoo.delete_many is stubbed to fail (class-level patch —
-    driver calls hit it, executor-side shard deletes and the instance
-    pickle are untouched), so the test can only pass if no key list
-    materializes on the driver. All expired keys are re-admitted
-    afterwards; kept keys keep the no-false-negative guarantee."""
-    from webcrawl_lowres_lang_spark.operators.cuckoo import PartitionedCuckoo
-
-    n, n_exp = 150_000, 120_000
-    s = _cuckoo_seen(spark, tmp_path, "big")
+    n, n_exp = 5_000, 2_000
+    s = SeenSet(spark, str(tmp_path / "seen"), n_buckets=8,
+                filter_config=CuckooConfig(capacity=20_000, num_shards=8))
     s.enable_empty_bloom()
-    all_keys = spark.range(1, n + 1).selectExpr("id AS url_hash")
-    assert s.add(all_keys, assume_new=True) == n
+    assert s.add(spark.range(1, n + 1).selectExpr("id AS url_hash"), assume_new=True) == n
     expired = spark.range(1, n_exp + 1).selectExpr("id AS url_hash")
-
-    def _fail(*_a, **_k):  # pins the code path, not just the outcome
-        raise AssertionError("driver-side delete_many used for a large batch")
-
-    monkeypatch.setattr(PartitionedCuckoo, "delete_many", _fail)
-    assert s.expire(expired) == n_exp  # default threshold 100k < 120k
-    monkeypatch.undo()
+    absent = spark.range(n + 1, n + 101).selectExpr("id AS url_hash")
+    assert s.expire(expired.unionByName(absent)) == n_exp
     assert s.count() == n - n_exp
 
     kept = np.arange(n_exp + 1, n + 1, dtype=np.int64)
     assert s._bloom.might_contain(kept).all(), "false negative on kept keys"
-    readmit = s.filter_unseen(expired)
-    assert readmit.count() == n_exp
+    assert s.filter_unseen(expired).count() == n_exp
 
 
 def _snapshot_seen(spark, tmp_path, kind):
@@ -198,11 +161,8 @@ def _snapshot_seen(spark, tmp_path, kind):
     for 64 keys, so its shards saturate and the overflow multisets fill."""
     from webcrawl_lowres_lang_spark.operators.cuckoo import CuckooConfig
 
-    s = SeenSet(
-        spark, str(tmp_path / f"seen_{kind}"), n_buckets=8, bloom_config=CFG,
-        filter_kind=kind,
-        cuckoo_config=CuckooConfig(capacity=64, num_shards=4, max_kicks=8),
-    )
+    config = CFG if kind == "bloom" else CuckooConfig(capacity=64, num_shards=4, max_kicks=8)
+    s = SeenSet(spark, str(tmp_path / f"seen_{kind}"), n_buckets=8, filter_config=config)
     s.enable_empty_bloom()
     s.add(_hash_df(spark, range(0, 4000, 2)), assume_new=True)
     return s
@@ -218,8 +178,7 @@ def test_filter_snapshot_round_trip(spark, tmp_path, kind):
     path = str(tmp_path / "snap.npz")
     s.save_snapshot(path)
 
-    s2 = SeenSet(spark, s.path, n_buckets=8, bloom_config=CFG,
-                 filter_kind=kind, cuckoo_config=s.filter_config)
+    s2 = SeenSet(spark, s.path, n_buckets=8, filter_config=s.filter_config)
     assert s2.restore(path) == "snapshot"
     table_keys = np.array(sorted(r["url_hash"] for r in s.load().collect()), dtype=np.int64)
     rand = np.random.default_rng(11).integers(-(2**63), 2**63 - 1, size=10_000, dtype=np.int64)
@@ -250,11 +209,11 @@ def test_stale_or_foreign_snapshot_falls_back_to_rebuild(spark, tmp_path, monkey
 
     # another geometry: the same table under a larger filter
     other = SeenSet(spark, s.path, n_buckets=8,
-                    bloom_config=BloomConfig(capacity=20_000, fpp=0.01, num_shards=8))
+                    filter_config=BloomConfig(capacity=20_000, fpp=0.01, num_shards=8))
     assert other.restore(path) == "rebuild: config differs"
     # the table moved on after the snapshot (an append never committed)
     s.add(_hash_df(spark, [1, 3, 5]), assume_new=True)
-    again = SeenSet(spark, s.path, n_buckets=8, bloom_config=CFG)
+    again = SeenSet(spark, s.path, n_buckets=8, filter_config=CFG)
     assert again.restore(path) == "rebuild: version differs"
     assert again.restore(str(tmp_path / "absent.npz")) == "rebuild: snapshot file missing"
     assert again.restore(None) == "rebuild: no snapshot"

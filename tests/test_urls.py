@@ -32,6 +32,9 @@ CASES = {
     "http://example.com./x": "http://example.com/x",
     # userinfo preserved
     "http://u:pw@example.com/": "http://u:pw@example.com/",
+    # IPv6 literals keep their brackets (RFC 3986 §3.2.2); hex lowercased
+    "http://[::1]:8080/a": "http://[::1]:8080/a",
+    "HTTP://[2001:DB8::1]:80/x": "http://[2001:db8::1]/x",
 }
 
 REL_OR_BAD = ["/relative/path", "page.html", "", "   ", "mailto:x@y.z", "javascript:void(0)", None]
@@ -50,14 +53,19 @@ def test_relative_guard_returns_none():
 
 @settings(max_examples=200, deadline=None)
 @given(
+    st.one_of(
+        st.just("example.com"),
+        st.ip_addresses(v=6).map("[{}]".format),
+        st.ip_addresses(v=6).map("[{}]:8080".format),
+    ),
     st.text(
         alphabet=st.characters(min_codepoint=33, max_codepoint=126),
         min_size=0,
         max_size=40,
-    )
+    ),
 )
-def test_canonicalize_idempotent(path):
-    u = f"http://example.com/{path}"
+def test_canonicalize_idempotent(host, path):
+    u = f"http://{host}/{path}"
     c1 = canonicalize_one(u)
     if c1 is None:
         return
@@ -70,6 +78,7 @@ def test_registrable_domain():
     assert registrable_domain_one("example.com") == "example.com"
     assert registrable_domain_one("localhost") == "localhost"
     assert registrable_domain_one("192.168.0.1") == "192.168.0.1"
+    assert registrable_domain_one("[::ffff:1.2.3.4]") == "[::ffff:1.2.3.4]"
     assert registrable_domain_one("www.waikato.ac.nz") == "waikato.ac.nz"
     assert registrable_domain_one(None) is None
 
@@ -138,7 +147,8 @@ _URL = st.builds(
 )
 # userinfo, ports, IPv4 and IPv6 in every corpus, whatever hypothesis draws
 _FIXED = ["http://u:pw@10.0.0.1:8080/x", "https://user@Example.COM:443/a/../b?y=1&x=2",
-          "http://a.b.c.example.co.nz:81", "http://192.168.0.1/", "http://[::1]:8080/v6"]
+          "http://a.b.c.example.co.nz:81", "http://192.168.0.1/", "http://[::1]:8080/v6",
+          "http://[2001:db8::1]/x"]
 
 
 @settings(max_examples=5, deadline=None,

@@ -14,7 +14,6 @@ Layout
                    scoring, near-dup suppression
 - ``plans/``       driver-contract query library (the reference's SQL and
                    crawl operators as DataFrame plans with DuckDB oracles)
-                   plus training-data sampling operators
 - ``streaming/``   incremental crawl-round loop + checkpoint/resume
 """
 

@@ -105,6 +105,8 @@ def canonicalize_one(url: str | None) -> str | None:
         return None
     if p is not None and str(p) != _DEFAULT_PORTS.get(scheme, ""):
         port = f":{p}"
+    if ":" in host:  # IPv6 literal: keep its brackets (RFC 3986 §3.2.2)
+        host = f"[{host}]"
     userinfo = ""
     if parts.username:
         userinfo = parts.username + (f":{parts.password}" if parts.password else "") + "@"
@@ -140,11 +142,13 @@ def registrable_domain_one(host: str | None) -> str | None:
     """eTLD+1-style registrable domain (politeness key, north rule).
 
     ``images.example.co.nz`` -> ``example.co.nz``;
-    ``a.b.example.com`` -> ``example.com``; IPs and single labels pass
-    through unchanged.
+    ``a.b.example.com`` -> ``example.com``; IPs (a bracketed IPv6
+    literal too) and single labels pass through unchanged.
     """
     if not host:
         return None
+    if host.startswith("["):
+        return host
     labels = host.lower().rstrip(".").split(".")
     if len(labels) <= 2:
         return host.lower().rstrip(".")
@@ -161,13 +165,15 @@ def _host_of_canon(canon: str | None) -> str | None:
     """Host of a canonical URL: its authority without userinfo and port
     (the sequential oracle's rule, tests/reference_oracle.py). It equals
     Spark's ``parse_url(url_canon, 'HOST')`` wherever Java's URI parser
-    accepts the host. ``canonicalize_one`` always writes a path, so the
-    authority ends at the first '/' after the scheme. An IPv6 host loses
-    its brackets in canonicalization, so the rule yields an empty string;
-    that becomes NULL, as ``parse_url`` gives for such a URL."""
+    accepts the host, an IPv6 literal included: it keeps its brackets.
+    ``canonicalize_one`` always writes a path, so the authority ends at
+    the first '/' after the scheme."""
     if canon is None:
         return None
-    return canon.split("://", 1)[1].split("/", 1)[0].split("@")[-1].split(":")[0] or None
+    authority = canon.split("://", 1)[1].split("/", 1)[0].split("@")[-1]
+    if authority.startswith("["):
+        return authority[: authority.index("]") + 1]
+    return authority.split(":")[0] or None
 
 
 _KEY_COLS = ("url_canon", "host", "domain")

@@ -45,14 +45,6 @@ class LexiconVector:
         self.vec = np.array([float(term_freqs[t]) for t in self.terms], dtype=np.float64)
         self.norm = float(np.sqrt(np.dot(self.vec, self.vec)))
 
-    def doc_vector(self, text: str) -> np.ndarray:
-        v = np.zeros(len(self.terms), dtype=np.float64)
-        for w in tokenize(text):
-            i = self.index.get(w)
-            if i is not None:
-                v[i] += 1.0
-        return v
-
     def cosine(self, text: str) -> float:
         """Single-text cosine — the sequential-oracle entry point.
 

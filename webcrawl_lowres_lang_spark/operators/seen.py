@@ -39,10 +39,9 @@ anti-join alone gives correct dedup, just without the probe shrink.
 
 from __future__ import annotations
 
-import os
 import zipfile
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
@@ -60,7 +59,6 @@ from .bloom import (
     build_filter_from_df,
     load_filter,
     save_filter,
-    shard_of,
 )
 from .cuckoo import CuckooConfig, PartitionedCuckoo
 
@@ -84,12 +82,11 @@ class SeenSet:
         spark: SparkSession,
         path: str,
         n_buckets: int = 64,
-        bloom_config: BloomConfig | None = None,
-        filter_kind: str = "bloom",
-        cuckoo_config: CuckooConfig | None = None,
+        filter_config: BloomConfig | CuckooConfig | None = None,
     ):
-        """``filter_kind``: "bloom" (default) or "cuckoo". Both satisfy the
-        same contract (no false negatives; vectorized might_contain;
+        """``filter_config``'s type picks the live filter: a ``BloomConfig``
+        (default: 10^6 keys at 1% fpp) or a ``CuckooConfig``. Both satisfy
+        the same contract (no false negatives; vectorized might_contain;
         treeAggregate build; shard merge) — cuckoo additionally supports
         O(1) per-key DELETION (TTL re-crawl, host retraction) where a
         Bloom forces a rebuild. Correctness never depends on the choice:
@@ -97,12 +94,7 @@ class SeenSet:
         self.spark = spark
         self.path = path
         self.n_buckets = n_buckets
-        bloom_config = bloom_config or BloomConfig(capacity=1_000_000, fpp=0.01)
-        self.filter_config = bloom_config
-        if filter_kind == "cuckoo":
-            self.filter_config = cuckoo_config or CuckooConfig(
-                capacity=bloom_config.capacity, num_shards=bloom_config.num_shards
-            )
+        self.filter_config = filter_config or BloomConfig(capacity=1_000_000, fpp=0.01)
         self._bloom: ShardedFilter | None = None
         # optional phase callback (CrawlEngine wires its _label here) so
         # driver-side time inside add() is attributable in profiles
@@ -213,7 +205,7 @@ class SeenSet:
         out.unpersist()
         return n
 
-    def expire(self, keys: DataFrame, distributed_threshold: int = 100_000) -> int:
+    def expire(self, keys: DataFrame) -> int:
         """TTL re-crawl / host retraction (reference analog: the bulk
         reset ops, sql.py:312-334): remove ``url_hash`` keys from the seen
         set so they are admitted again. Returns keys actually removed.
@@ -226,22 +218,13 @@ class SeenSet:
         resident and break the no-false-negative guarantee; the filter's
         own might_contain is NOT ground truth, the table is.
 
-        Filter handling: 'cuckoo' drops the fingerprints in O(1) per key
-        — its reason to exist; 'bloom' cannot clear bits, so the filter
-        is REBUILT from the rewritten table (the full-scan cost cuckoo
+        Filter handling: 'cuckoo' collects the verified keys to the driver
+        (8 bytes a key) and drops their fingerprints in O(1) per key — its
+        reason to exist; 'bloom' cannot clear bits, so the filter is
+        REBUILT from the rewritten table (the full-scan cost cuckoo
         avoids). The exact table rewrite is the tablestore seam's
-        row-level DELETE (Iceberg: rewrite affected files + snapshot).
-
-        Small batches (one host / one TTL window) collect the verified
-        key list to the driver for the O(1) fingerprint drops. Batches
-        above ``distributed_threshold`` keys — a whole-large-host
-        retraction can be millions — never materialize the key list on
-        the driver: the delete set stays distributed, grouped by filter
-        shard, and each executor task deep-copies its shard from a
-        broadcast of the live filter, drops that group's fingerprints, and
-        ships back the UPDATED SHARD (driver traffic bounded by filter
-        size, not delete count). The table rewrite itself stays
-        distributed in both modes.
+        row-level DELETE (Iceberg: rewrite affected files + snapshot) and
+        stays distributed.
         """
         present = (
             self._with_bucket(keys.select("url_hash").distinct())
@@ -256,62 +239,12 @@ class SeenSet:
         rewrite_table(remaining, self.path, partition_by=("bucket",))
         if self._bloom is not None:
             if isinstance(self._bloom, PartitionedCuckoo):
-                import numpy as np
-
-                if n <= distributed_threshold:
-                    hashes = [r["url_hash"] for r in present.select("url_hash").collect()]
-                    self._bloom.delete_many(np.array(hashes, dtype=np.int64))
-                else:
-                    self._distributed_cuckoo_delete(present)
+                hashes = [r["url_hash"] for r in present.select("url_hash").collect()]
+                self._bloom.delete_many(np.array(hashes, dtype=np.int64))
             else:
                 self.build_bloom()
         present.unpersist()
         return n
-
-    def _distributed_cuckoo_delete(self, present: DataFrame) -> None:
-        """Shard-parallel fingerprint deletion: group verified-present
-        keys by filter shard (same ``shard_of`` as the filter itself, run
-        in a vectorized pandas UDF so the sharding function can never
-        drift), deep-copy each touched shard from a broadcast of the live
-        filter on an executor, delete that group's fingerprints there, and
-        swap the returned shard blobs into the driver-side filter. No key
-        list ever materializes on the driver."""
-        import copy
-        import pickle
-
-        import numpy as np
-
-        bc = self.spark.sparkContext.broadcast(self._bloom)
-        num_shards = self._bloom.config.num_shards
-
-        @F.pandas_udf("int")
-        def shard_col(keys: pd.Series) -> pd.Series:
-            return pd.Series(
-                shard_of(keys.to_numpy(dtype=np.int64), num_shards).astype("int32")
-            )
-
-        def drop_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            sid = int(pdf["shard"].iloc[0])
-            shard = bc.value.shards.get(sid)
-            if shard is None:  # key verified present yet shard empty: impossible
-                return pd.DataFrame({"sid": [sid], "blob": [b""]})
-            local = copy.deepcopy(shard)
-            local.delete_many(pdf["url_hash"].to_numpy(dtype=np.int64))
-            return pd.DataFrame({"sid": [sid], "blob": [pickle.dumps(local)]})
-
-        try:
-            rows = (
-                present.select("url_hash")
-                .withColumn("shard", shard_col(F.col("url_hash")))
-                .groupBy("shard")
-                .applyInPandas(drop_group, "sid int, blob binary")
-                .collect()
-            )
-        finally:
-            bc.destroy()
-        for r in rows:
-            if r["blob"]:
-                self._bloom.shards[r["sid"]] = pickle.loads(bytes(r["blob"]))
 
     # -- bloom lifecycle -------------------------------------------------------
 

@@ -13,71 +13,12 @@ Conventions (driver correctness-gate contract):
 
 from __future__ import annotations
 
-import os
-import tempfile
-import zipfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-_PKG_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-_PKG_NAME = "webcrawl_lowres_lang_spark"
-_SHIPPED: set[int] = set()
-
-
-def _pkg_sources() -> list[str]:
-    out = []
-    for dirpath, dirnames, files in os.walk(os.path.join(_PKG_ROOT, _PKG_NAME)):
-        if "__pycache__" in dirpath:
-            continue
-        dirnames.sort()
-        for f in sorted(files):
-            if f.endswith(".py"):
-                out.append(os.path.join(dirpath, f))
-    return out
-
-
-def _pkg_fingerprint(paths: list[str]) -> str:
-    """Content fingerprint of the package sources (path+mtime+size), so the
-    shipped zip is rebuilt after ANY source edit. A stale zip is worse than
-    no zip: Spark's worker inserts addPyFile entries at the FRONT of
-    sys.path, silently shadowing fresher code on executors."""
-    import hashlib
-
-    h = hashlib.md5()
-    for p in paths:
-        st = os.stat(p)
-        h.update(f"{os.path.relpath(p, _PKG_ROOT)}:{st.st_mtime_ns}:{st.st_size};".encode())
-    return h.hexdigest()[:12]
-
-
-def ensure_executors_can_import(spark: SparkSession) -> None:
-    """Ship the package to executors via addPyFile (idempotent per context).
-
-    The driver may create its SparkSession from any cwd; python workers
-    only see the package when it is on their sys.path. This is the
-    runtime equivalent of `spark-submit --py-files` and costs one zip
-    upload per SparkContext. The zip name carries a content fingerprint:
-    a fresh source tree gets a fresh zip (and a fresh addPyFile), never a
-    stale cached one.
-    """
-    sc = spark.sparkContext
-    key = id(sc._jsc)
-    if key in _SHIPPED:
-        return
-    paths = _pkg_sources()
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"{_PKG_NAME}_pyfiles_{_pkg_fingerprint(paths)}.zip"
-    )
-    if not os.path.exists(zpath):
-        tmp = zpath + f".tmp{os.getpid()}"
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as z:
-            for full in paths:
-                z.write(full, os.path.relpath(full, _PKG_ROOT))
-        os.replace(tmp, zpath)  # atomic: concurrent sessions never see a partial zip
-    sc.addPyFile(zpath)
-    _SHIPPED.add(key)
+from ..session import ensure_executors_can_import
 
 
 @dataclass

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from ..determinism import quantize9
 from ..functions.urls import with_url_keys
 from ..operators.bloom import BloomConfig
+from ..operators.cuckoo import CuckooConfig
 from ..operators.fetch import fetch_and_validate, sniff_reject
 from ..operators.neardup import suppress_near_dups
 from ..operators.ordering import with_global_sequence
@@ -101,12 +102,18 @@ class CrawlEngine:
         (reference: DH2025-TONGAN-EXPT-PHASE02-GENURLS.sh). The English
         anti-join (J7, queries.py:57-70) applies to overrides too, exactly
         as the reference's regenerated dictionaries go through query-gen."""
+        c = config
+        if c.seen_filter == "bloom":
+            filter_config = BloomConfig(capacity=c.bloom_capacity, fpp=0.01, num_shards=16)
+        elif c.seen_filter == "cuckoo":
+            filter_config = CuckooConfig(capacity=c.bloom_capacity, num_shards=16)
+        else:
+            raise ValueError(f"seen_filter must be 'bloom' or 'cuckoo', got {c.seen_filter!r}")
         self.spark = spark
         self.cfg = config
         self.dir = checkpoint_dir
         os.makedirs(checkpoint_dir, exist_ok=True)
 
-        c = config
         lex_rows = (
             fx.gen_lexicon_rows(c.seed, c.n_lexicon_terms)
             if lexicon_rows is None
@@ -138,8 +145,7 @@ class CrawlEngine:
             spark,
             os.path.join(checkpoint_dir, "url_seen"),
             n_buckets=16,
-            bloom_config=BloomConfig(capacity=c.bloom_capacity, fpp=0.01, num_shards=16),
-            filter_kind=c.seen_filter,
+            filter_config=filter_config,
         )
         self.seen._phase_cb = self._label  # driver-side profile attribution
         self.phase_wall: list[tuple[str, float]] = []

@@ -5,8 +5,8 @@ Local:
     python -m webcrawl_lowres_lang_spark.streaming.run_crawl \
         --checkpoint /tmp/crawl_ck --rounds 3 --n-urls 30000
 
-Cluster (the registry also ships the package via addPyFile, so --py-files
-is belt-and-braces):
+Cluster (``session.ensure_executors_can_import`` also ships the package
+via addPyFile, so --py-files is belt-and-braces):
     spark-submit --py-files webcrawl_lowres_lang_spark.zip \
         -m ... run_crawl.py --master yarn --checkpoint s3://bucket/ck ...
 
@@ -27,7 +27,7 @@ import json
 import sys
 import time
 
-from ..session import DEFAULT_CPUS, get_spark
+from ..session import DEFAULT_CPUS, ensure_executors_can_import, get_spark
 from .crawler import CrawlConfig, CrawlEngine
 
 
@@ -62,8 +62,6 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("ERROR")
     # ship the package to python workers (the in-repo equivalent of
     # --py-files; harmless when spark-submit already provided it)
-    from ..plans.registry import ensure_executors_can_import
-
     ensure_executors_can_import(spark)
     t0 = time.perf_counter()
     if args.resume:
